@@ -33,6 +33,18 @@ from ..functions.hashing import hash64
 from .balance import ensure_parallelism
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, embedded backticks
+    doubled: a column name never parses as an expression or a nested
+    field path, whatever characters it holds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _id(name: str) -> Column:
+    """The column literally named ``name`` (see ``_ident``)."""
+    return F.col(_ident(name))
+
+
 def dedup_exact(df: DataFrame, text_col: str = "text", keep: str = "min", id_col: str = "doc_id") -> DataFrame:
     """Exact-duplicate removal on the hash of ``text_col``: keep one row
     (min or max ``id_col``) per distinct text.
@@ -205,10 +217,10 @@ def shingle_rows(
     """
     df = ensure_parallelism(df)
     warr = df.select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("__ws")
+        _id(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("__ws")
     )
     return warr.select(
-        F.col(id_col),
+        _id(id_col),
         F.explode(
             F.array_distinct(
                 F.transform(
@@ -286,23 +298,22 @@ def minhash_signatures(
         "__g", "__s"
     )
     h1, h2 = _minhash_bases(F.col("__s"), hash_how)
-    based = exploded.select(id_col, h1.alias("__h1"), h2.alias("__h2"))
+    based = exploded.select(_id(id_col), h1.alias("__h1"), h2.alias("__h2"))
     # Aggregate expressions as SQL strings (r13): the Column-object form
     # costs ~6 py4j round trips per hash function (~200 per call, a
     # measured ~1.4 s of driver-side build under load); the parsed
     # expressions are identical, so the plan and values are unchanged.
-    mins = based.groupBy(id_col).agg(
+    mins = based.groupBy(_id(id_col)).agg(
         F.expr(f"min((__h1 + 0 * __h2) % {MINHASH_P}) AS __m0"),
         *[
             F.expr(f"min((__h1 + {k} * __h2) % {MINHASH_P}) AS __m{k}")
             for k in range(1, num_hashes)
         ],
     )
-    # id_col is an IDENTIFIER, not an expression: backtick-quote it so
-    # names needing quoting (spaces, dots, hyphens) pass through
-    # selectExpr exactly as the old select(id_col) accepted them
+    # id_col is an IDENTIFIER, not an expression: quoted and escaped, so
+    # names holding spaces, dots, hyphens or backticks pass through
     return mins.selectExpr(
-        f"`{id_col}`",
+        _ident(id_col),
         f"array({', '.join(f'__m{k}' for k in range(num_hashes))}) AS __sig",
     )
 
@@ -315,7 +326,7 @@ def _band_buckets(
     cross-corpus dedup so both produce identical buckets."""
     rows_per_band = num_hashes // bands
     return sig.select(
-        F.col(id_col),
+        _id(id_col),
         "__sig",
         F.explode(
             F.transform(
@@ -332,7 +343,7 @@ def _band_buckets(
             )
         ).alias("__b"),
     ).select(
-        F.col(id_col), "__sig", F.col("__b.band").alias("band"), F.col("__b.bh").alias("bh")
+        _id(id_col), "__sig", F.col("__b.band").alias("band"), F.col("__b.bh").alias("bh")
     )
 
 
@@ -696,7 +707,7 @@ def simhash_fingerprints(
             lane_exprs.append(f"sum({lo} + {hi}) AS __l{j}")
         else:
             lane_exprs.append(f"sum({lo}) AS __l{j}")
-    votes = exploded.groupBy(id_col).agg(
+    votes = exploded.groupBy(_id(id_col)).agg(
         F.expr(lane_exprs[0]),
         *[F.expr(e) for e in lane_exprs[1:]],
         F.count("__h").alias("__cnt"),
@@ -708,8 +719,8 @@ def simhash_fingerprints(
         terms.append(
             f"shiftleft(CAST(coalesce(2 * {s}, 0) > __cnt AS BIGINT), {num_bits - 1 - i})"
         )
-    # backtick-quote: id_col is an identifier, not a SQL expression
-    return votes.selectExpr(f"`{id_col}`", "(" + " | ".join(terms) + ") AS __fp")
+    # quoted and escaped: id_col is an identifier, not a SQL expression
+    return votes.selectExpr(_ident(id_col), "(" + " | ".join(terms) + ") AS __fp")
 
 
 def simhash_pairs(
@@ -861,6 +872,30 @@ def duplicate_components(
         # safe: the returned state is parquet-materialized, its lineage
         # no longer references the cached edges
         edges.unpersist()
+
+
+def _min_components(edges) -> dict:
+    """{node: minimum node of its component} over an iterable of
+    ``(a, b)`` edges — ``duplicate_components``' answer computed by an
+    in-memory union-find, for edge lists already collected to the driver
+    (the streaming micro-batch, bounded by its trigger). Roots are always
+    the minimum of their set: a union links the larger root under the
+    smaller one, and finds compress paths as they walk."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def dedup_keep_canonical(

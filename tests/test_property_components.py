@@ -1,5 +1,6 @@
-"""Property tests: duplicate_components vs a Python union-find model on
-random graphs, and winnowing_fingerprints vs a pure-Python MOSS model.
+"""Property tests: duplicate_components and the driver-side
+``_min_components`` vs a Python union-find model on random graphs, and
+winnowing_fingerprints vs a pure-Python MOSS model.
 
 The existing component tests pin specific topologies (chains, analytic
 clusters); random edge lists exercise merge orders, cycles, multiple
@@ -53,6 +54,18 @@ def test_duplicate_components_matches_union_find(spark, edges):
         for r in duplicate_components(df, max_iterations=10).collect()
     }
     assert got == _union_find_components(edges)
+
+
+@given(edges=edges_strategy)
+@settings(max_examples=200, deadline=None)
+def test_min_components_matches_union_find(edges):
+    """The driver-side union-find the streaming ingest resolves its star
+    edges with, against the same referee, including string ids."""
+    from data_pipelines_examples_spark.operators.dedup import _min_components
+
+    assert _min_components(edges) == _union_find_components(edges)
+    named = [(f"n{a}", f"n{b}") for a, b in edges]
+    assert _min_components(named) == _union_find_components(named)
 
 
 def _h64(s: str) -> int:

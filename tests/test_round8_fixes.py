@@ -80,10 +80,9 @@ def test_scope_exit_releases_anchor(spark):
 
 def test_ingest_batch_drains_internal_persists(spark, tmp_path):
     """ingest_batch is terminal (both writes happen before return), so
-    the persists armed by minhash_lsh_pairs / dedup_keep_canonical must
-    be scope-drained on exit — a long-running stream would otherwise
-    leak one set of cached frames PER MICRO-BATCH. A caller's pre-armed
-    persist must survive."""
+    the persist it arms (the batch's band frame) must be scope-drained
+    on exit — a long-running stream would otherwise leak one cached
+    frame PER MICRO-BATCH. A caller's pre-armed persist must survive."""
     from data_pipelines_examples_spark import release_cached
     from data_pipelines_examples_spark.cache import persist_internal
     from data_pipelines_examples_spark.streaming.ingest import ingest_batch

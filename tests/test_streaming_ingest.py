@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
@@ -163,3 +164,196 @@ def test_progress_collector_records_microbatches(spark, tmp_path):
         assert all("triggerExecution" in r["duration_ms"] for r in data_batches)
     finally:
         collector.detach()
+
+
+# ---------------------------------------------------------------------------
+# ingest_batch against the pair-list composition it replaced
+# ---------------------------------------------------------------------------
+
+
+def _reference_ingest(spark, batch, batch_id, out_path, bands_path, id_col):
+    """The pair-list composition ``ingest_batch`` must reproduce:
+    ``minhash_lsh_pairs`` → ``dedup_keep_canonical`` → the survivors'
+    band buckets semi-joined against the whole band table."""
+    from data_pipelines_examples_spark.cache import internal_persist_scope
+    from data_pipelines_examples_spark.operators.dedup import (
+        _band_buckets,
+        dedup_keep_canonical,
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+    from data_pipelines_examples_spark.sources.writers import _path_exists
+
+    with internal_persist_scope():
+        batch = batch.dropDuplicates([id_col])
+        pairs = minhash_lsh_pairs(batch, id_col, "text", 32, 8, 3, "xxhash64")
+        batch_dd = dedup_keep_canonical(batch, pairs, id_col)
+        nb = _band_buckets(
+            minhash_signatures(batch_dd, id_col, "text", 32, 3, "xxhash64"),
+            id_col, 32, 8, "xxhash64",
+        )
+        survivors = batch_dd
+        if _path_exists(spark, bands_path):
+            existing = spark.read.parquet(bands_path).select("band", "bh").distinct()
+            kill = (
+                nb.join(existing, ["band", "bh"], "left_semi").select(id_col).distinct()
+            )
+            survivors = batch_dd.join(kill, id_col, "left_anti")
+        survivors.withColumn("__batch_id", F.lit(batch_id)).write.mode(
+            "overwrite"
+        ).partitionBy("__batch_id").option("partitionOverwriteMode", "dynamic").parquet(
+            out_path
+        )
+        nb.join(survivors.select(id_col), id_col, "left_semi").select(
+            id_col, "band", "bh"
+        ).withColumn("__batch_id", F.lit(batch_id)).write.mode("overwrite").partitionBy(
+            "__batch_id"
+        ).option("partitionOverwriteMode", "dynamic").parquet(bands_path)
+
+
+def _words(rng, n):
+    return [f"w{rng.randrange(20000)}" for _ in range(n)]
+
+
+def _chain(rng, start, length=64):
+    """``length`` documents sliding 4 words at a time along one 40-word
+    window: neighbours are near-duplicates, the two ends share nothing."""
+    stream = _words(rng, 4 * length + 40)
+    return [(start + i, " ".join(stream[4 * i : 4 * i + 40])) for i in range(length)]
+
+
+def _seeded_batches(seed):
+    """Two landing batches over int ids. Batch 0: random documents,
+    planted near-duplicates, a hot bucket of 50 identical documents, a
+    64-long duplicate chain, a null id and a repeated id. Batch 1 repeats
+    every shape and adds copies and near-copies of batch-0 documents."""
+    import random
+
+    rng = random.Random(seed)
+    docs0 = [(i, " ".join(_words(rng, 30))) for i in range(40)]
+    b0 = list(docs0)
+    b0 += [(100 + i, docs0[i][1] + " tail") for i in range(0, 40, 5)]
+    hot0 = " ".join(_words(rng, 30))
+    b0 += [(200 + i, hot0) for i in range(50)]
+    b0 += _chain(rng, 300)
+    b0 += [(None, docs0[1][1]), (3, docs0[3][1]), (400, " ".join(_words(rng, 30)))]
+
+    docs1 = [(1000 + i, " ".join(_words(rng, 30))) for i in range(30)]
+    b1 = list(docs1)
+    b1 += [(1100 + i, docs1[i][1] + " coda") for i in range(0, 30, 6)]
+    b1 += [(1200 + i, docs0[i][1]) for i in range(0, 40, 4)]  # corpus copies
+    b1 += [(1300 + i, hot0 + " again") for i in range(50)]  # hot bucket vs corpus
+    b1 += [(1400 + i, " ".join(_words(rng, 6)) + " " + docs0[i][1]) for i in (2, 7)]
+    b1 += _chain(rng, 1500)
+    b1 += [(None, docs1[0][1]), (1000, docs1[0][1])]
+    return [b0, b1]
+
+
+def _sink_rows(spark, out_path, bands_path, id_col):
+    key = lambda v: (v is None, v)  # noqa: E731
+    ids = sorted((r[0] for r in spark.read.parquet(out_path).select(id_col).collect()), key=key)
+    bands = sorted(
+        (tuple(r) for r in spark.read.parquet(bands_path).select(
+            id_col, "band", "bh", "__batch_id").collect()),
+        key=lambda t: (key(t[0]),) + t[1:],
+    )
+    return ids, bands
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_ingest_batch_matches_pair_list_composition(spark, tmp_path, id_type):
+    """Star edges + a driver union-find + a batch-keyed band probe give
+    the same corpus ids and band rows as the pair-list composition, batch
+    after batch, on planted near-duplicates, a 50-document hot bucket, a
+    64-long chain, a null and a repeated id, with int and string ids (the
+    string ids order differently from the ints: "d10" < "d9")."""
+    from data_pipelines_examples_spark.streaming.ingest import ingest_batch
+
+    def as_id(v):
+        return v if v is None or id_type == "bigint" else f"d{v}"
+
+    got = {k: str(tmp_path / k) for k in ("corpus", "bands", "ref_corpus", "ref_bands")}
+    for b, rows in enumerate(_seeded_batches(seed=11)):
+        df = spark.createDataFrame(
+            [(as_id(i), t) for i, t in rows], f"doc_id {id_type}, text string"
+        )
+        ingest_batch(spark, df, b, got["corpus"], got["bands"])
+        _reference_ingest(spark, df, b, got["ref_corpus"], got["ref_bands"], "doc_id")
+        ids, bands = _sink_rows(spark, got["corpus"], got["bands"], "doc_id")
+        ref_ids, ref_bands = _sink_rows(spark, got["ref_corpus"], got["ref_bands"], "doc_id")
+        assert ids == ref_ids
+        assert bands == ref_bands
+
+        batch_ids = {as_id(i) for i, _ in rows}
+        kept = batch_ids & set(ids)
+        assert None in kept  # a null id never links, never drops
+        if b == 0:
+            hot = {as_id(200 + i) for i in range(50)}
+            assert kept & hot == {min(hot)}
+            chain = {as_id(300 + i) for i in range(64)}
+            assert len(kept & chain) < 8
+        else:
+            # every copy of a batch-0 document is a corpus hit
+            assert not kept & {as_id(1200 + i) for i in range(0, 40, 4)}
+            assert not kept & {as_id(1300 + i) for i in range(50)}
+    assert None not in {r[0] for r in bands}  # null-id buckets are not appended
+
+
+def test_backtick_id_column_is_an_identifier(spark, tmp_path):
+    """An id column whose name holds a backtick is quoted, not parsed:
+    signatures, fingerprints and the ingest sinks carry it unchanged."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from data_pipelines_examples_spark.operators.dedup import (
+        minhash_signatures,
+        simhash_fingerprints,
+    )
+    from data_pipelines_examples_spark.streaming.ingest import ingest_batch
+
+    rows = [(1, BASE), (2, BASE + " extra"), (3, OTHER)]
+    name = "doc`id"
+    odd = spark.createDataFrame(
+        rows, StructType([StructField(name, LongType()), StructField("text", StringType())])
+    )
+    plain = spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    for op, val in ((minhash_signatures, "__sig"), (simhash_fingerprints, "__fp")):
+        out = op(odd, name)
+        assert out.columns == [name, val]
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, op(plain, "doc_id").collect())
+        )
+
+    out, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
+    ingest_batch(spark, odd, 0, out, bands, id_col=name)
+    assert sorted(r[0] for r in spark.read.parquet(out).collect()) == [1, 3]
+    assert spark.read.parquet(bands).columns == [name, "band", "bh", "__batch_id"]
+
+
+def _ingest_jobs(spark, rows, root, group):
+    from data_pipelines_examples_spark.streaming.ingest import ingest_batch
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    sc.setJobGroup(group, "ingest_batch job count")
+    try:
+        ingest_batch(spark, df, 0, f"{root}/corpus", f"{root}/bands")
+    finally:
+        sc.setJobGroup(None, None)
+    kept = spark.read.parquet(f"{root}/corpus").count()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), kept
+
+
+def test_ingest_batch_jobs_do_not_grow_with_duplicate_chains(spark, tmp_path):
+    """Components resolve on the driver, so a 64-long duplicate chain
+    launches no more jobs than a batch without duplicates: no job runs
+    per fixpoint round."""
+    import random
+
+    rng = random.Random(5)
+    unique = [(i, " ".join(_words(rng, 40))) for i in range(96)]
+    chained = unique[:32] + _chain(rng, 500)
+    jobs_unique, kept_unique = _ingest_jobs(spark, unique, str(tmp_path / "u"), "ingest-unique")
+    jobs_chain, kept_chain = _ingest_jobs(spark, chained, str(tmp_path / "c"), "ingest-chain")
+    assert kept_unique == 96 and kept_chain < 32 + 8  # the chain collapsed
+    assert abs(jobs_chain - jobs_unique) <= 1, (jobs_unique, jobs_chain)

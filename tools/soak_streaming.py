@@ -15,6 +15,12 @@ batch:
   clean),
 - cumulative batch counts per stream.
 
+It also prints each micro-batch's ``addBatch`` time (the foreachBatch
+body, from ``attach_progress_collector``) per stream, and compares the
+median of the first decile of batches with the last: the band table
+grows by every batch, so a flat ratio shows the per-batch cost tracks
+the batch, not the table. That comparison is reported, not gated.
+
 Exit code 0 iff: both streams processed all their files, the registry
 is EMPTY after the streams stop, and max storage memory across the
 soak stays under `--storage-ceiling-mb` (default 64 MB — the steady
@@ -62,6 +68,9 @@ def main() -> int:
     from data_pipelines_examples_spark import cache
     from data_pipelines_examples_spark.session import get_session
     from data_pipelines_examples_spark.streaming.ingest import stream_ingest_dedup
+    from data_pipelines_examples_spark.streaming.pipeline import (
+        attach_progress_collector,
+    )
 
     spark = get_session("streaming-soak")
     sc = spark.sparkContext
@@ -80,6 +89,7 @@ def main() -> int:
         return (total_max - total_free) / (1024 * 1024)
 
     root = tempfile.mkdtemp(prefix="soak_")
+    collector = attach_progress_collector(spark)
     try:
         # stage all input files up front; maxFilesPerTrigger=1 makes
         # each file one micro-batch
@@ -179,6 +189,7 @@ def main() -> int:
             spark.read.parquet(os.path.join(root, f"corpus{s}")).count()
             for s in (1, 2)
         ]
+        add_batch = _add_batch_ms(collector, [str(q.id) for q in queries], n_batches)
         peak_mb = max(x["storage_mb"] for x in samples)
         last_batches = samples[-1]["batches"]
         ok = (
@@ -198,6 +209,7 @@ def main() -> int:
                     "storage_mb_peak": peak_mb,
                     "storage_mb_last": samples[-1]["storage_mb"],
                     "last_batch_ids": last_batches,
+                    "add_batch_ms": add_batch,
                     "wall_sec": round(time.time() - t0, 1),
                     "ok": ok,
                 }
@@ -205,7 +217,45 @@ def main() -> int:
         )
         return 0 if ok else 1
     finally:
+        collector.detach()
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _add_batch_ms(collector, query_ids: list[str], n_batches: int) -> list[dict]:
+    """Per stream: every data batch's ``addBatch`` ms in batch order, and
+    the median of the first decile of batches against the last decile's.
+    Listener delivery is asynchronous, so wait briefly for the records."""
+    import statistics
+
+    def per_query():
+        recs = [r for r in collector.records if r["num_input_rows"] > 0]
+        return {
+            q: sorted(
+                (r["batch_id"], r["duration_ms"].get("addBatch", 0))
+                for r in recs
+                if r["query_id"] == q
+            )
+            for q in query_ids
+        }
+
+    for _ in range(50):
+        got = per_query()
+        if all(len(v) >= n_batches for v in got.values()):
+            break
+        time.sleep(0.2)
+    out = []
+    for ms in ([m for _b, m in v] for v in got.values()):
+        k = max(1, len(ms) // 10)
+        first, last = statistics.median(ms[:k]), statistics.median(ms[-k:])
+        out.append(
+            {
+                "per_batch": ms,
+                "first_decile_median": first,
+                "last_decile_median": last,
+                "last_over_first": round(last / first, 2) if first else None,
+            }
+        )
+    return out
 
 
 if __name__ == "__main__":
