@@ -471,16 +471,17 @@ def minhash_lsh_pairs(
     banded = _band_buckets(sig, id_col, num_hashes, bands, hash_how)
     a = banded.alias("a")
     b = banded.alias("b")
+    a_id, b_id = F.col(f"a.{_ident(id_col)}"), F.col(f"b.{_ident(id_col)}")
     pairs = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (a_id < b_id),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            a_id.alias("id_a"),
+            b_id.alias("id_b"),
             (
                 F.size(
                     F.filter(
@@ -562,7 +563,7 @@ def ngram_jaccard_pairs(
     grams = (
         shingle_rows(df, id_col, text_col, shingle_n)
         .groupBy("__g")
-        .agg(F.collect_set(F.col(id_col)).alias("__ids"))
+        .agg(F.collect_set(_id(id_col)).alias("__ids"))
     )
     docs = (
         grams.select(
@@ -570,14 +571,14 @@ def ngram_jaccard_pairs(
             F.size("__ids").alias("__df"),
             F.explode("__ids").alias(id_col),
         )
-        .groupBy(id_col)
+        .groupBy(_id(id_col))
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("__df").alias("d"), F.col("__g").alias("g")))
             ).alias("__sorted")
         )
         .select(
-            id_col,
+            _id(id_col),
             F.transform("__sorted", lambda s: s["g"]).alias("__gs"),
             F.size("__sorted").alias("__n"),
         )
@@ -591,12 +592,12 @@ def ngram_jaccard_pairs(
         )
         .transform(persist_internal)
     )
-    posting = docs.select(id_col, "__n", F.explode("__prefix").alias("__g"))
+    posting = docs.select(_id(id_col), "__n", F.explode("__prefix").alias("__g"))
     a = posting.select(
-        F.col(id_col).alias("id_a"), F.col("__n").alias("__na"), "__g"
+        _id(id_col).alias("id_a"), F.col("__n").alias("__na"), "__g"
     )
     b = posting.select(
-        F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"), "__g"
+        _id(id_col).alias("id_b"), F.col("__n").alias("__nb"), "__g"
     )
     cand = (
         a.join(b, "__g")
@@ -612,10 +613,10 @@ def ngram_jaccard_pairs(
     )
     return (
         cand.join(
-            docs.select(F.col(id_col).alias("id_a"), F.col("__gs").alias("__ga")), "id_a"
+            docs.select(_id(id_col).alias("id_a"), F.col("__gs").alias("__ga")), "id_a"
         )
         .join(
-            docs.select(F.col(id_col).alias("id_b"), F.col("__gs").alias("__gb")), "id_b"
+            docs.select(_id(id_col).alias("id_b"), F.col("__gs").alias("__gb")), "id_b"
         )
         .withColumn("__inter", F.size(F.array_intersect("__ga", "__gb")))
         .withColumn(
@@ -749,7 +750,7 @@ def simhash_pairs(
         df, id_col, text_col, num_bits, hash_how=hash_how
     ).transform(persist_internal)
     banded = fp.select(
-        id_col,
+        _id(id_col),
         "__fp",
         F.explode(
             F.array(
@@ -764,18 +765,19 @@ def simhash_pairs(
                 ]
             )
         ).alias("__b"),
-    ).select(id_col, "__fp", "__b.band", "__b.chunk")
+    ).select(_id(id_col), "__fp", "__b.band", "__b.chunk")
     a, b = banded.alias("a"), banded.alias("b")
+    a_id, b_id = F.col(f"a.{_ident(id_col)}"), F.col(f"b.{_ident(id_col)}")
     pairs = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (a_id < b_id),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            a_id.alias("id_a"),
+            b_id.alias("id_b"),
             F.bit_count(F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))).alias("hamming"),
         )
         # Hamming is a per-pair constant, so filtering BEFORE the dedup

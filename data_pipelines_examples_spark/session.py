@@ -31,6 +31,14 @@ _COMMON: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Let AQE coalesce the top shuffle of a CACHED plan too. Off (Spark's
+    # default), every `persist_internal` frame keeps all
+    # `shuffle.partitions` (32 local, 2,560 cluster) however few rows it
+    # holds, and each later stage over it runs that many tasks. Spark's
+    # reason for the default — a join on the cache's own shuffle key may
+    # then need a re-shuffle — does not bite the library's persists: no
+    # catalog plan gains an Exchange with it on.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "snappy",

@@ -12,7 +12,10 @@ probes the stored (band, bh) rows only, keyed by its own buckets.
 One micro-batch computes each thing once (``ingest_batch``):
 
 1. ONE band frame ``(id, band, bh)`` — MinHash signatures banded once
-   and persisted; every later step reads it.
+   and persisted; every later step reads it. AQE sizes the persisted
+   frame to its rows (``canChangeCachedPlanOutputPartitioning`` in
+   ``session._COMMON``), so a micro-batch appends ONE band file, not
+   one per shuffle partition.
 2. Within-batch clusters as STAR edges: each LSH bucket's members link
    to the bucket's minimum id (a window ``min`` over ``(band, bh)``).
    The components equal those of the bucket's full pair clique, but a
@@ -28,7 +31,9 @@ One micro-batch computes each thing once (``ingest_batch``):
    at most rows × bands edges plus the hit ids per micro-batch, bounded
    by the stream's trigger options (``maxFilesPerTrigger`` and kin).
 5. Both sinks broadcast-anti-join that one drop set: the corpus from
-   the batch, the band rows from the persisted band frame.
+   the batch, the band rows from the persisted band frame. The drop set
+   is built from an Arrow table — a JVM-side ``LocalRelation``, no
+   Python worker — and persisted, so both writes read one copy.
 
 Exactly-once on replay: Structured Streaming re-runs a micro-batch after
 failure, so both sinks partition by ``__batch_id`` and write with
@@ -38,6 +43,7 @@ instead of duplicating it (idempotency pinned by test).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -91,9 +97,10 @@ def ingest_batch(
     are not appended to the band table.
 
     TERMINAL pipeline (everything is consumed by the two writes before
-    return), so the band frame's internal persist is scope-drained on
-    exit — without this, a long-running stream leaks one cached frame
-    PER MICRO-BATCH (the r7-verdict drain-audit's one real gap).
+    return), so the band frame's and the drop set's internal persists
+    are scope-drained on exit — without this, a long-running stream
+    leaks cached frames PER MICRO-BATCH (the r7-verdict drain-audit's
+    one real gap).
 
     ``bands`` is deliberately a FIXED int (no "auto"): every batch's
     band buckets must be comparable with the PERSISTED band table at
@@ -160,10 +167,13 @@ def _ingest_batch_inner(
     canon = _min_components((i, root) for i, root, hit in rows if not hit)
     drop_ids = {i for i, c in canon.items() if i != c}
     drop_ids.update(i for i, _root, hit in rows if hit)
+    # From Arrow: a LocalRelation the JVM decodes, so no sink write runs a
+    # Python worker. Persisted: a bare LocalRelation costs each sink its
+    # own broadcast job when non-empty; the cache serves both.
     drop = spark.createDataFrame(
-        [(i,) for i in drop_ids],
+        pa.table({id_col: list(drop_ids)}),
         StructType([StructField(id_col, batch.schema[id_col].dataType)]),
-    )
+    ).transform(persist_internal)
 
     for frame, path in ((batch, out_path), (keyed, bands_path)):
         (

@@ -373,7 +373,13 @@ def test_lsh_pair_selfjoins_consume_one_cached_frame(spark):
     which the alias split defeats) — measured: the full signature
     pipeline ran TWICE per query before the persist. Pin that BOTH
     join sides read the persisted frame (>= 2 InMemoryTableScan), so a
-    refactor that drops the persist fails here, not in the bench."""
+    refactor that drops the persist fails here, not in the bench.
+
+    Once consumed, the minhash and simhash signature frames hold the
+    partitions their rows need (AQE coalesces a cached plan's shuffle),
+    not one per shuffle partition. The embedding frame has no shuffle to
+    coalesce: ``ensure_parallelism`` spreads it on purpose."""
+    from data_pipelines_examples_spark import cache
     from data_pipelines_examples_spark.operators.dedup import (
         minhash_lsh_pairs,
         simhash_pairs,
@@ -388,13 +394,20 @@ def test_lsh_pair_selfjoins_consume_one_cached_frame(spark):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     tables = gauss_plane_tables(n_tables=2, n_planes=4, dim=64, seed=1)
-    for df in (
-        minhash_lsh_pairs(d, num_hashes=8, bands=2),
-        simhash_pairs(d, max_hamming=3, bands=4, num_bits=64),
-        embedding_dedup_pairs_lsh(emb, tables, threshold=0.4),
+    for make, coalesced in (
+        (lambda: minhash_lsh_pairs(d, num_hashes=8, bands=2), True),
+        (lambda: simhash_pairs(d, max_hamming=3, bands=4, num_bits=64), True),
+        (lambda: embedding_dedup_pairs_lsh(emb, tables, threshold=0.4), False),
     ):
+        armed_before = len(cache._TRACKED)
+        df = make()
+        armed = [e[0] for e in cache._TRACKED[armed_before:]]
         plan = physical_plan(df)
         assert plan.count("InMemoryTableScan") >= 2, plan
+        if coalesced:
+            df.collect()
+            parts = [f.rdd.getNumPartitions() for f in armed]
+            assert parts == [1], parts
 
 
 def test_cooccurrence_pairs_no_basket_selfjoin(spark):

@@ -300,34 +300,54 @@ def test_ingest_batch_matches_pair_list_composition(spark, tmp_path, id_type):
 
 
 def test_backtick_id_column_is_an_identifier(spark, tmp_path):
-    """An id column whose name holds a backtick is quoted, not parsed:
-    signatures, fingerprints and the ingest sinks carry it unchanged."""
+    """An id column whose name holds a backtick or a dot is quoted, not
+    parsed: signatures, fingerprints, the pair operators and the ingest
+    sinks carry it unchanged."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from data_pipelines_examples_spark.cache import internal_persist_scope
     from data_pipelines_examples_spark.operators.dedup import (
+        minhash_lsh_pairs,
         minhash_signatures,
+        ngram_jaccard_pairs,
         simhash_fingerprints,
+        simhash_pairs,
     )
     from data_pipelines_examples_spark.streaming.ingest import ingest_batch
 
+    def simhash_8_bands(df, id_col):
+        # docs 1 and 2 sit 7 bits apart: 8 bands of 8 bits catch them
+        return simhash_pairs(df, id_col, max_hamming=7, bands=8)
+
     rows = [(1, BASE), (2, BASE + " extra"), (3, OTHER)]
-    name = "doc`id"
-    odd = spark.createDataFrame(
-        rows, StructType([StructField(name, LongType()), StructField("text", StringType())])
-    )
     plain = spark.createDataFrame(rows, "doc_id bigint, text string")
+    with internal_persist_scope():
+        want_pairs = {
+            op: sorted(map(tuple, op(plain, "doc_id").collect()))
+            for op in (minhash_lsh_pairs, simhash_8_bands, ngram_jaccard_pairs)
+        }
+    assert all([w[:2] for w in want] == [(1, 2)] for want in want_pairs.values())
 
-    for op, val in ((minhash_signatures, "__sig"), (simhash_fingerprints, "__fp")):
-        out = op(odd, name)
-        assert out.columns == [name, val]
-        assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, op(plain, "doc_id").collect())
+    for name in ("doc`id", "doc.id"):
+        odd = spark.createDataFrame(
+            rows,
+            StructType([StructField(name, LongType()), StructField("text", StringType())]),
         )
+        for op, val in ((minhash_signatures, "__sig"), (simhash_fingerprints, "__fp")):
+            out = op(odd, name)
+            assert out.columns == [name, val]
+            assert sorted(map(tuple, out.collect())) == sorted(
+                map(tuple, op(plain, "doc_id").collect())
+            )
 
-    out, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
-    ingest_batch(spark, odd, 0, out, bands, id_col=name)
-    assert sorted(r[0] for r in spark.read.parquet(out).collect()) == [1, 3]
-    assert spark.read.parquet(bands).columns == [name, "band", "bh", "__batch_id"]
+        with internal_persist_scope():
+            for op, want in want_pairs.items():
+                assert sorted(map(tuple, op(odd, name).collect())) == want, (name, op)
+
+        out, bands = str(tmp_path / name / "corpus"), str(tmp_path / name / "bands")
+        ingest_batch(spark, odd, 0, out, bands, id_col=name)
+        assert sorted(r[0] for r in spark.read.parquet(out).collect()) == [1, 3]
+        assert spark.read.parquet(bands).columns == [name, "band", "bh", "__batch_id"]
 
 
 def _ingest_jobs(spark, rows, root, group):
@@ -357,3 +377,15 @@ def test_ingest_batch_jobs_do_not_grow_with_duplicate_chains(spark, tmp_path):
     jobs_chain, kept_chain = _ingest_jobs(spark, chained, str(tmp_path / "c"), "ingest-chain")
     assert kept_unique == 96 and kept_chain < 32 + 8  # the chain collapsed
     assert abs(jobs_chain - jobs_unique) <= 1, (jobs_unique, jobs_chain)
+
+
+def test_ingest_batch_appends_one_band_file(spark, tmp_path):
+    """AQE sizes the persisted band frame to its rows, so a 96-document
+    micro-batch appends one band file, not one per shuffle partition."""
+    import random
+
+    rng = random.Random(5)
+    rows = [(i, " ".join(_words(rng, 40))) for i in range(96)]
+    _ingest_jobs(spark, rows, str(tmp_path), "ingest-band-files")
+    part = tmp_path / "bands" / "__batch_id=0"
+    assert len(list(part.glob("part-*.parquet"))) == 1

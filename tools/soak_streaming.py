@@ -19,7 +19,9 @@ It also prints each micro-batch's ``addBatch`` time (the foreachBatch
 body, from ``attach_progress_collector``) per stream, and compares the
 median of the first decile of batches with the last: the band table
 grows by every batch, so a flat ratio shows the per-batch cost tracks
-the batch, not the table. That comparison is reported, not gated.
+the batch, not the table. Beside it, each stream's band table reports
+its data-file count and files per micro-batch (1 expected: AQE sizes
+the persisted band frame to its rows). Both are reported, not gated.
 
 Exit code 0 iff: both streams processed all their files, the registry
 is EMPTY after the streams stop, and max storage memory across the
@@ -190,6 +192,7 @@ def main() -> int:
             for s in (1, 2)
         ]
         add_batch = _add_batch_ms(collector, [str(q.id) for q in queries], n_batches)
+        band_files = [_band_files(os.path.join(root, f"bands{s}")) for s in (1, 2)]
         peak_mb = max(x["storage_mb"] for x in samples)
         last_batches = samples[-1]["batches"]
         ok = (
@@ -210,6 +213,7 @@ def main() -> int:
                     "storage_mb_last": samples[-1]["storage_mb"],
                     "last_batch_ids": last_batches,
                     "add_batch_ms": add_batch,
+                    "band_files": band_files,
                     "wall_sec": round(time.time() - t0, 1),
                     "ok": ok,
                 }
@@ -219,6 +223,21 @@ def main() -> int:
     finally:
         collector.detach()
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _band_files(bands_path: str) -> dict:
+    """Data files in one band table, and per ``__batch_id`` partition."""
+    parts = [d for d in os.listdir(bands_path) if d.startswith("__batch_id=")]
+    files = sum(
+        f.startswith("part-") and f.endswith(".parquet")
+        for d in parts
+        for f in os.listdir(os.path.join(bands_path, d))
+    )
+    return {
+        "data_files": files,
+        "micro_batches": len(parts),
+        "files_per_micro_batch": round(files / len(parts), 2) if parts else None,
+    }
 
 
 def _add_batch_ms(collector, query_ids: list[str], n_batches: int) -> list[dict]:
