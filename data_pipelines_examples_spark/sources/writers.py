@@ -19,6 +19,8 @@ reference hand-tunes repartition before constrained sinks.
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +41,27 @@ def _path_exists(spark, path: str) -> bool:
     silently destroy prior state (see ``upsert_by_key``)."""
     fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def _count(df: DataFrame) -> int:
+    """``df.count()`` in ONE Spark job: the zero-column plan's rows are
+    counted in the JVM, with no aggregate exchange (adaptive execution
+    runs that exchange's two stages as two jobs). A file scan still opens
+    every file and reads its footer, so this stays a full validation read."""
+    return df.select()._jdf.queryExecution().toRdd().count()
+
+
+def _data_files(spark, path: str, fmt: str, schema) -> list[str]:
+    """The data files under ``path`` (none if it does not exist), listed
+    by ONE JVM call: the file index of a read given ``schema``, so no
+    schema-inference job runs. ``inputFiles()`` returns URIs with escaped
+    characters; decoded, each one loads back as a path — a partition
+    value holding a space, ``%`` or a non-ASCII character included."""
+    if not _path_exists(spark, path):
+        return []
+    return [
+        unquote(f) for f in spark.read.format(fmt).schema(schema).load(path).inputFiles()
+    ]
 
 
 _OLD_SUFFIX = "__old"
@@ -204,10 +227,15 @@ def write_validated(
 ) -> int:
     """Write then re-read and assert count equality — the reference's
     post-write validation idiom. Returns the validated count of rows
-    WRITTEN BY THIS CALL (for append: target delta, not target total).
+    WRITTEN BY THIS CALL.
 
     The source is counted from a cached plan so write+count don't recompute
-    differently; the sink is counted from the files actually written.
+    differently. The sink side counts exactly the files this call added:
+    the target's data files after the write minus those before it, read
+    with ``df.schema`` (no schema-inference job). So an append, a dynamic
+    partition overwrite (the session default) and a full overwrite all
+    validate the rows they wrote, at a cost that grows with the files
+    written, not with the target.
 
     Deliberately NOT the Observation API (which would fold the count into
     the write job): registering any Observation on the session leaves
@@ -216,16 +244,9 @@ def write_validated(
     tests/test_catalog_copyinto.py::test_copy_into_does_not_poison_ml_collect.
     """
     spark = df.sparkSession
-    pre_existing = 0
-    if mode == "append" and _path_exists(spark, path):
-        # Existence is probed explicitly: a read failure on an EXISTING
-        # target must raise, not masquerade as pre_existing=0 (which would
-        # surface later as a spurious WriteValidationError hiding the
-        # real error).
-        pre_existing = spark.read.format(fmt).load(path).count()
+    before = set(_data_files(spark, path, fmt, df.schema))
     df = df.cache()
     try:
-        expected = df.count()
         out = df
         if target_parallelism is not None:
             out = out.repartition(target_parallelism)
@@ -233,8 +254,18 @@ def write_validated(
         if partition_by:
             parts = [partition_by] if isinstance(partition_by, str) else list(partition_by)
             writer = writer.partitionBy(*parts)
+        # the write fills the cache; counting it first would cost its own
+        # materialization job
         writer.save(path)
-        actual = spark.read.format(fmt).load(path).count() - pre_existing
+        expected = _count(df)
+        added = [f for f in _data_files(spark, path, fmt, df.schema) if f not in before]
+        actual = (
+            _count(
+                spark.read.format(fmt).schema(df.schema).option("basePath", path).load(added)
+            )
+            if added
+            else 0
+        )
         if actual != expected:
             raise WriteValidationError(
                 f"wrote {actual} rows to {path}, expected {expected}"
@@ -288,7 +319,10 @@ def upsert_by_key(
     # the count IS the validation read — __old is dropped only after it
     # succeeds, and a failed read rolls the partial install back
     return _install_and_validate(
-        spark, staging, path, lambda: spark.read.format(fmt).load(path).count()
+        spark,
+        staging,
+        path,
+        lambda: _count(spark.read.format(fmt).schema(latest.schema).load(path)),
     )
 
 
@@ -304,29 +338,29 @@ def compact_path(
     upserts accrete files far below the ideal scan granule, and at 100 TB
     a scan's task count (and the namenode/liststatus load) is file-bound.
     Rewrites the dataset into ~``target_mb`` files (computed from the
-    ACTUAL on-disk byte size, not row counts), preserving values exactly,
-    then atomically swaps via the same staging-rename as ``upsert_by_key``
-    so concurrent readers never observe a half-compacted path.
+    ACTUAL on-disk byte size, one ``getContentSummary`` call, not row
+    counts), preserving values exactly, then atomically swaps via the
+    same staging-rename as ``upsert_by_key`` so concurrent readers never
+    observe a half-compacted path. The installed layout must hold every
+    source row: its count is compared with the source's inside the swap's
+    validation, so a mismatch rolls the install back to the parked copy.
+    File counts come from the reads' own file indexes (one JVM call each).
 
     With ``partition_by`` the layout is rewritten partitioned and files
-    coalesce WITHIN partitions (maxRecordsPerFile bounds stay with
-    Spark's writer). Idempotent: re-running on a compacted path is a
+    coalesce WITHIN partitions: each partition value hashes to one of
+    ``max(files, defaultParallelism)`` write tasks, so it gets one file
+    (maxRecordsPerFile bounds stay with Spark's writer) and the tasks
+    write in parallel. Idempotent: re-running on a compacted path is a
     no-op rewrite with the same file count.
 
     Returns {"files_before", "files_after", "rows", "bytes"}.
     """
     _recover_interrupted_swap(spark, path, fmt)
     fs, target = _hadoop_fs(spark, path)
-    before, total_bytes = 0, 0
-    it = fs.listFiles(target, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if not name.startswith(("_", ".")):
-            before += 1
-            total_bytes += f.getLen()
+    total_bytes = fs.getContentSummary(target).getLength()
     df = spark.read.format(fmt).load(path)
-    rows = df.count()
+    before = len(df.inputFiles())
+    rows = _count(df)
     n_files = max(int(total_bytes / (target_mb * 1024 * 1024)) + 1, 1)
     staging = path.rstrip("/") + "__compacting"
     parts = (
@@ -335,23 +369,27 @@ def compact_path(
     if parts:
         # cluster rows of one partition into the same tasks so each
         # partition directory gets few, large files
-        out = df.repartition(n_files, *[F.col(c) for c in parts])
+        n_tasks = max(n_files, spark.sparkContext.defaultParallelism)
+        out = df.repartition(n_tasks, *[F.col(c) for c in parts])
         writer = out.write.format(fmt).mode("overwrite").partitionBy(*parts)
     else:
         out = df.repartition(n_files)
         writer = out.write.format(fmt).mode("overwrite")
     writer.save(staging)
-    # a full count is the validation read (a listing alone never resolves
-    # footers, so it would pass a truncated install); only after it
-    # succeeds is the parked previous layout dropped
-    _install_and_validate(
-        spark, staging, path, lambda: spark.read.format(fmt).load(path).count()
-    )
-    after = 0
-    it = fs.listFiles(target, True)
-    while it.hasNext():
-        if not it.next().getPath().getName().startswith(("_", ".")):
-            after += 1
+
+    def validate() -> int:
+        # a full count is the validation read (a listing alone never
+        # resolves footers, so it would pass a truncated install); only
+        # after it matches the source is the parked layout dropped
+        installed = spark.read.format(fmt).schema(df.schema).load(path)
+        got = _count(installed)
+        if got != rows:
+            raise WriteValidationError(
+                f"compacted {path} holds {got} rows, expected {rows}"
+            )
+        return len(installed.inputFiles())
+
+    after = _install_and_validate(spark, staging, path, validate)
     return {
         "files_before": before,
         "files_after": after,

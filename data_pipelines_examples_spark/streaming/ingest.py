@@ -11,29 +11,29 @@ probes the stored (band, bh) rows only, keyed by its own buckets.
 
 One micro-batch computes each thing once (``ingest_batch``):
 
-1. ONE band frame ``(id, band, bh)`` — MinHash signatures banded once
-   and persisted; every later step reads it. AQE sizes the persisted
-   frame to its rows (``canChangeCachedPlanOutputPartitioning`` in
-   ``session._COMMON``), so a micro-batch appends ONE band file, not
-   one per shuffle partition.
-2. Within-batch clusters as STAR edges: each LSH bucket's members link
-   to the bucket's minimum id (a window ``min`` over ``(band, bh)``).
-   The components equal those of the bucket's full pair clique, but a
-   bucket of k members yields k − 1 edges instead of k(k − 1)/2, so the
-   edge count is at most rows × bands however hot a bucket runs.
+1. The deduplicated batch is persisted, and its MinHash signatures are
+   banded once into ``(id, band, bh)`` rows that come back to the driver
+   in ONE collect — at most rows × bands of them.
+2. Within-batch clusters as STAR edges, on the driver: each LSH bucket's
+   members link to the bucket's minimum id. The components equal those
+   of the bucket's full pair clique, but a bucket of k members yields
+   k − 1 edges instead of k(k − 1)/2, and a union-find
+   (``dedup._min_components``) resolves them with no Spark job however
+   the duplicates chain.
 3. Corpus hits: the band table semi-joins a BROADCAST of the batch's
-   distinct ``(band, bh)`` — the table is only scanned, never shuffled
-   or ``distinct``-ed, and what survives the probe is bounded by the
-   batch; the matched keys map back to the batch ids that carry them.
-4. The edges and the hit ids come back to the driver in ONE collect, and
-   a union-find (``dedup._min_components``) resolves the components. The
-   drop set is every non-canonical cluster member plus every hit id —
-   at most rows × bands edges plus the hit ids per micro-batch, bounded
-   by the stream's trigger options (``maxFilesPerTrigger`` and kin).
-5. Both sinks broadcast-anti-join that one drop set: the corpus from
-   the batch, the band rows from the persisted band frame. The drop set
-   is built from an Arrow table — a JVM-side ``LocalRelation``, no
-   Python worker — and persisted, so both writes read one copy.
+   distinct ``(band, bh)`` keys (an Arrow-built ``LocalRelation``) — the
+   table is only scanned, never shuffled or ``distinct``-ed — and only
+   the matched keys are collected; they map back to the batch ids that
+   carry them.
+4. The drop set is every non-canonical cluster member plus every hit id.
+   The driver holds the band rows plus the matched keys of ONE
+   micro-batch, bounded by the stream's trigger options
+   (``maxFilesPerTrigger`` and kin).
+5. The corpus broadcast-anti-joins the drop set (an Arrow-built
+   ``LocalRelation``: the JVM decodes it, no Python worker) from the
+   persisted batch. The band sink is the kept band rows themselves, an
+   Arrow-built ``LocalRelation`` coalesced to one partition, so a
+   micro-batch appends ONE band file.
 
 Exactly-once on replay: Structured Streaming re-runs a micro-batch after
 failure, so both sinks partition by ``__batch_id`` and write with
@@ -44,7 +44,7 @@ instead of duplicating it (idempotency pinned by test).
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -75,32 +75,31 @@ def ingest_batch(
     semantics are directly testable; the foreachBatch closure below is a
     thin wrapper).
 
-    Steps (module docstring has the why): (1) band the batch's MinHash
-    signatures once into a persisted ``(id, band, bh)`` frame; (2) link
-    every LSH bucket's members to the bucket's minimum id (star edges);
-    (3) probe the PERSISTED band table with a broadcast of the batch's
-    own ``(band, bh)`` keys; (4) collect the edges and the hit ids in
-    one action and resolve the components on the driver — the drop set
-    is the non-canonical members plus the hits; (5) anti-join that drop
-    set into the corpus (from the batch) and the band table (from the
-    band frame), both into partition ``__batch_id = batch_id`` with
-    dynamic overwrite so a replayed batch rewrites instead of
-    duplicating. Outputs equal the pair-list composition
+    Steps (module docstring has the why): (1) persist the deduplicated
+    batch and collect its banded MinHash rows ``(id, band, bh)`` once;
+    (2) link every LSH bucket's members to the bucket's minimum id (star
+    edges) and resolve the components on the driver; (3) probe the
+    PERSISTED band table with a broadcast of the batch's own
+    ``(band, bh)`` keys and collect the matched keys — the drop set is
+    the non-canonical members plus the ids carrying a matched key;
+    (4) anti-join that drop set into the corpus (from the batch) and
+    write the kept band rows, both into partition ``__batch_id =
+    batch_id`` with dynamic overwrite so a replayed batch rewrites
+    instead of duplicating. Outputs equal the pair-list composition
     (``minhash_lsh_pairs`` → ``dedup_keep_canonical`` → a semi-join
     against the whole band table; pinned by test) at a job count that
     does not depend on how the duplicates chain.
 
-    Driver memory: the collected rows are at most rows × bands edges
-    plus the hit ids of ONE micro-batch; the stream's trigger options
-    (``maxFilesPerTrigger``, ``maxBytesPerTrigger``) bound that. Null
-    ids never link or drop (a null equals nothing), and their buckets
-    are not appended to the band table.
+    Driver memory: the band rows of ONE micro-batch (at most rows ×
+    bands) plus its matched band-table keys; the stream's trigger
+    options (``maxFilesPerTrigger``, ``maxBytesPerTrigger``) bound both.
+    Null ids never link or drop (a null equals nothing), and their
+    buckets are not appended to the band table.
 
     TERMINAL pipeline (everything is consumed by the two writes before
-    return), so the band frame's and the drop set's internal persists
-    are scope-drained on exit — without this, a long-running stream
-    leaks cached frames PER MICRO-BATCH (the r7-verdict drain-audit's
-    one real gap).
+    return), so the persisted batch is scope-drained on exit — without
+    this, a long-running stream leaks cached frames PER MICRO-BATCH (the
+    r7-verdict drain-audit's one real gap).
 
     ``bands`` is deliberately a FIXED int (no "auto"): every batch's
     band buckets must be comparable with the PERSISTED band table at
@@ -128,57 +127,64 @@ def _ingest_batch_inner(
     shingle_n: int,
     hash_how: str,
 ) -> None:
-    batch = batch.dropDuplicates([id_col])
+    batch = batch.dropDuplicates([id_col]).transform(persist_internal)
     doc = _id(id_col)
-    nb = (
-        _band_buckets(
-            minhash_signatures(batch, id_col, text_col, num_hashes, shingle_n, hash_how),
-            id_col,
-            num_hashes,
-            bands,
-            hash_how,
-        )
-        .select(doc, "band", "bh")
-        .transform(persist_internal)
-    )
-    keyed = nb.filter(doc.isNotNull())
+    nb = _band_buckets(
+        minhash_signatures(batch, id_col, text_col, num_hashes, shingle_n, hash_how),
+        id_col,
+        num_hashes,
+        bands,
+        hash_how,
+    ).select(doc, "band", "bh")
+    rows = nb.filter(doc.isNotNull()).collect()
 
-    # (id, root, hit): star edges to each bucket's minimum id, then the
-    # ids whose buckets the band table already holds
-    found = keyed.select(
-        doc.alias("__id"),
-        F.min(doc).over(Window.partitionBy("band", "bh")).alias("__root"),
-        F.lit(False).alias("__hit"),
-    ).filter(F.col("__id") != F.col("__root"))
-    if _path_exists(spark, bands_path):
-        keys = nb.select("band", "bh").distinct()
-        # the band frame's own key types: no schema-inference job per batch
-        probe = (
-            spark.read.schema(StructType([nb.schema["band"], nb.schema["bh"]]))
+    # star edges: every bucket member links to the bucket's minimum id
+    roots: dict = {}
+    for i, band, bh in rows:
+        root = roots.get((band, bh))
+        if root is None or i < root:
+            roots[(band, bh)] = i
+    canon = _min_components(
+        (i, roots[(band, bh)]) for i, band, bh in rows if i != roots[(band, bh)]
+    )
+    drop_ids = {i for i, c in canon.items() if i != c}
+    if roots and _path_exists(spark, bands_path):
+        # the band rows' own key types: no schema-inference job per batch
+        key_schema = StructType([nb.schema["band"], nb.schema["bh"]])
+        band_keys, bh_keys = zip(*roots)
+        keys = spark.createDataFrame(
+            pa.table({"band": band_keys, "bh": bh_keys}), key_schema
+        )
+        matched = {
+            tuple(r)
+            for r in spark.read.schema(key_schema)
             .parquet(bands_path)
             .join(F.broadcast(keys), ["band", "bh"], "left_semi")
-        )
-        hits = keyed.join(F.broadcast(probe), ["band", "bh"], "left_semi").select(
-            doc.alias("__id"), doc.alias("__root"), F.lit(True).alias("__hit")
-        )
-        found = found.unionByName(hits)
+            .select("band", "bh")
+            .collect()
+        }
+        drop_ids.update(i for i, band, bh in rows if (band, bh) in matched)
 
-    rows = found.collect()
-    canon = _min_components((i, root) for i, root, hit in rows if not hit)
-    drop_ids = {i for i, c in canon.items() if i != c}
-    drop_ids.update(i for i, _root, hit in rows if hit)
-    # From Arrow: a LocalRelation the JVM decodes, so no sink write runs a
-    # Python worker. Persisted: a bare LocalRelation costs each sink its
-    # own broadcast job when non-empty; the cache serves both.
+    # From Arrow: a LocalRelation the JVM decodes, so the corpus write
+    # runs no Python worker.
     drop = spark.createDataFrame(
         pa.table({id_col: list(drop_ids)}),
         StructType([StructField(id_col, batch.schema[id_col].dataType)]),
-    ).transform(persist_internal)
+    )
+    kept = [r for r in rows if r[0] not in drop_ids]
+    band_rows = spark.createDataFrame(
+        pa.table(
+            {f.name: [r[k] for r in kept] for k, f in enumerate(nb.schema.fields)}
+        ),
+        nb.schema,
+    ).coalesce(1)
 
-    for frame, path in ((batch, out_path), (keyed, bands_path)):
+    for frame, path in (
+        (batch.join(F.broadcast(drop), id_col, "left_anti"), out_path),
+        (band_rows, bands_path),
+    ):
         (
-            frame.join(F.broadcast(drop), id_col, "left_anti")
-            .withColumn("__batch_id", F.lit(batch_id))
+            frame.withColumn("__batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .partitionBy("__batch_id")
             .option("partitionOverwriteMode", "dynamic")

@@ -80,7 +80,7 @@ def test_scope_exit_releases_anchor(spark):
 
 def test_ingest_batch_drains_internal_persists(spark, tmp_path):
     """ingest_batch is terminal (both writes happen before return), so
-    the persist it arms (the batch's band frame) must be scope-drained
+    the persist it arms (the deduplicated batch) must be scope-drained
     on exit — a long-running stream would otherwise leak one cached
     frame PER MICRO-BATCH. A caller's pre-armed persist must survive."""
     from data_pipelines_examples_spark import release_cached

@@ -90,6 +90,89 @@ def test_write_validated_append_counts_delta(spark, tmp_path):
     assert spark.read.parquet(path).count() == 65
 
 
+def test_write_validated_dynamic_overwrite_counts_written_partition(spark, tmp_path):
+    """A partitioned overwrite onto an existing table replaces only the
+    partitions it writes (dynamic mode, the session default): it
+    validates and returns those rows, not the whole table's."""
+    path = str(tmp_path / "dyn")
+    p1 = spark.range(10).withColumn("p", F.lit(1))
+    p2 = spark.range(5).withColumn("p", F.lit(2))
+    assert write_validated(p1, path, partition_by="p") == 10
+    assert write_validated(p2, path, partition_by="p") == 5
+    got = spark.read.parquet(path).groupBy("p").count().collect()
+    assert {(r.p, r["count"]) for r in got} == {(1, 10), (2, 5)}
+
+
+def test_writers_keep_partition_values_that_need_escaping(spark, tmp_path):
+    """Partition directories escape these values and file listings
+    URI-escape the paths again: an append, a dynamic overwrite and a
+    compaction must still find the files they wrote and keep every row
+    and value."""
+    from data_pipelines_examples_spark.sources.writers import compact_path
+
+    vals = ["a b", "c:d", "e/f", "g%h", "%20", "i=j", "ü ñ", None]
+    key = lambda r: (r[0], r[1] is None, r[1] or "")  # noqa: E731
+
+    def rows_of(lo, hi, some=vals):
+        return [(i, some[i % len(some)]) for i in range(lo, hi)]
+
+    def table():
+        return sorted(map(tuple, spark.read.parquet(path).select("id", "p").collect()), key=key)
+
+    path = str(tmp_path / "esc")
+    schema = "id bigint, p string"
+    assert write_validated(
+        spark.createDataFrame(rows_of(0, 16), schema), path, mode="append", partition_by="p"
+    ) == 16
+    assert write_validated(
+        spark.createDataFrame(rows_of(16, 40), schema), path, mode="append", partition_by="p"
+    ) == 24
+    assert table() == sorted(rows_of(0, 40), key=key)
+
+    # dynamic overwrite of half the values: those partitions now hold
+    # only the new rows, the others keep theirs
+    replaced = vals[::2]
+    over = rows_of(100, 112, replaced)
+    assert write_validated(
+        spark.createDataFrame(over, schema), path, partition_by="p"
+    ) == 12
+    want = sorted([r for r in rows_of(0, 40) if r[1] not in replaced] + over, key=key)
+    assert table() == want
+
+    stats = compact_path(spark, path, partition_by="p")
+    assert stats["rows"] == len(want)
+    assert stats["files_after"] == len(vals)  # one file per partition value
+    assert table() == want
+
+
+def test_compact_path_rolls_back_an_install_that_lost_rows(spark, tmp_path, monkeypatch):
+    """The compacted layout is counted against the source inside the
+    swap's validation: a staging file lost before the install makes the
+    call raise and restores the original rows."""
+    from pathlib import Path
+
+    import pytest
+
+    from data_pipelines_examples_spark.sources import writers
+
+    path = str(tmp_path / "lossy")
+    df = spark.range(60).withColumn("part", (F.col("id") % 3).cast("int"))
+    for i in range(3):
+        df.filter(F.col("id") % 3 == i).write.mode("append").parquet(path)
+    want = sorted(map(tuple, spark.read.parquet(path).collect()))
+    install = writers._install_and_validate
+
+    def lose_one_file(spark_, staging, target, validate):
+        next(Path(staging).rglob("part-*.parquet")).unlink()
+        return install(spark_, staging, target, validate)
+
+    monkeypatch.setattr(writers, "_install_and_validate", lose_one_file)
+    with pytest.raises(writers.WriteValidationError, match="expected 60"):
+        writers.compact_path(spark, path, partition_by="part")
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
+    assert not Path(path + "__old").exists()
+
+
 def test_overwrite_partitions_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string")

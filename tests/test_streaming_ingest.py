@@ -380,7 +380,7 @@ def test_ingest_batch_jobs_do_not_grow_with_duplicate_chains(spark, tmp_path):
 
 
 def test_ingest_batch_appends_one_band_file(spark, tmp_path):
-    """AQE sizes the persisted band frame to its rows, so a 96-document
+    """The kept band rows are written as one partition, so a 96-document
     micro-batch appends one band file, not one per shuffle partition."""
     import random
 

@@ -19,9 +19,11 @@ It also prints each micro-batch's ``addBatch`` time (the foreachBatch
 body, from ``attach_progress_collector``) per stream, and compares the
 median of the first decile of batches with the last: the band table
 grows by every batch, so a flat ratio shows the per-batch cost tracks
-the batch, not the table. Beside it, each stream's band table reports
-its data-file count and files per micro-batch (1 expected: AQE sizes
-the persisted band frame to its rows). Both are reported, not gated.
+the batch, not the table. Beside it, each stream reports its Spark jobs
+per micro-batch (every job that ran under the stream's run-id job
+group, divided by its data batches), and its band table reports its
+data-file count and files per micro-batch (1 expected: each micro-batch
+writes its band rows as one file). All three are reported, not gated.
 
 Exit code 0 iff: both streams processed all their files, the registry
 is EMPTY after the streams stop, and max storage memory across the
@@ -126,6 +128,16 @@ def main() -> int:
                 )
             )
         samples = []
+        # Structured Streaming runs every job of a stream under its run
+        # id's job group. Collected while the soak runs: the status
+        # tracker keeps only the most recent jobs.
+        groups = [str(q.runId) for q in queries]
+        job_ids: list[set] = [set() for _ in queries]
+
+        def collect_jobs() -> None:
+            for ids, group in zip(job_ids, groups):
+                ids.update(sc.statusTracker().getJobIdsForGroup(group))
+
         t0 = time.time()
         # a healthy file-source stream never self-terminates, and a
         # failed one never reaches the last batch id — both need a
@@ -146,6 +158,7 @@ def main() -> int:
                 and not q.status["isTriggerActive"]
                 for q in queries
             )
+            collect_jobs()
             with cache._LOCK:
                 reg = len(cache._TRACKED)
             samples.append(
@@ -169,6 +182,7 @@ def main() -> int:
             q.stop()
         for q in queries:
             q.awaitTermination(60)
+        collect_jobs()
 
         with cache._LOCK:
             reg_after = len(cache._TRACKED)
@@ -213,6 +227,10 @@ def main() -> int:
                     "storage_mb_last": samples[-1]["storage_mb"],
                     "last_batch_ids": last_batches,
                     "add_batch_ms": add_batch,
+                    "jobs_per_micro_batch": [
+                        round(len(ids) / len(a["per_batch"]), 2) if a["per_batch"] else None
+                        for ids, a in zip(job_ids, add_batch)
+                    ],
                     "band_files": band_files,
                     "wall_sec": round(time.time() - t0, 1),
                     "ok": ok,
