@@ -43,6 +43,22 @@ def hash64(c: Column, seed: int | None = None, how: str = "xxhash64") -> Column:
     raise ValueError(f"unknown hash_how: {how!r}")
 
 
+def hash64_sql(expr: str, seed: int | None = None, how: str = "xxhash64") -> str:
+    """Spark SQL text computing ``hash64`` of the SQL expression ``expr``.
+
+    The text form lets an operator build a whole projection as one parsed
+    expression (``selectExpr``/``F.expr``) instead of one py4j round trip
+    per Column node. The parsed trees equal the ``hash64`` Column trees,
+    so the values are identical on both paths."""
+    if how == "xxhash64":
+        return f"xxhash64({expr})" if seed is None else f"xxhash64({expr}, {int(seed)})"
+    if how == "portable":
+        if seed is not None:
+            expr = f"concat('{int(seed)}:', {expr})"
+        return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+    raise ValueError(f"unknown hash_how: {how!r}")
+
+
 def sql_hash64(expr: str) -> str:
     """DuckDB SQL text computing the same value as ``portable_hash64``."""
     return f"('0x'||substr(md5({expr}),1,15))::BIGINT"

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_internal
 
-from ..functions.hashing import hash64
+from ..functions.hashing import hash64, hash64_sql
 from .balance import ensure_parallelism
 
 
@@ -214,21 +214,20 @@ def shingle_rows(
     gzip) would run the whole narrow shingle/hash stage on those few
     cores — rebalance up front in that case (see ``balance.
     ensure_parallelism``: RDD-free, no-op at production scale).
+
+    Each projection is one parsed SQL expression over quoted identifiers
+    (``_ident``): the same expression tree as the Column-builder form,
+    without a py4j round trip per node and lambda.
     """
-    df = ensure_parallelism(df)
-    warr = df.select(
-        _id(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("__ws")
+    ident = _ident(id_col)
+    warr = ensure_parallelism(df).selectExpr(
+        ident, f"split(lower({_ident(text_col)}), '\\\\s+') AS __ws"
     )
-    return warr.select(
-        _id(id_col),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.greatest(F.size("__ws") - n, F.lit(0))),
-                    lambda i: F.array_join(F.slice("__ws", i + 1, n), " "),
-                )
-            )
-        ).alias("__g"),
+    return warr.selectExpr(
+        ident,
+        "explode(array_distinct(transform("
+        f"sequence(0, greatest(size(__ws) - {int(n)}, 0)), "
+        f"i -> array_join(slice(__ws, i + 1, {int(n)}), ' ')))) AS __g",
     )
 
 
@@ -294,28 +293,22 @@ def minhash_signatures(
     regardless of document length. Values are identical to
     ``minhash_signature``.
     """
-    exploded = shingle_rows(df, id_col, text_col, shingle_n).withColumnRenamed(
-        "__g", "__s"
-    )
-    h1, h2 = _minhash_bases(F.col("__s"), hash_how)
-    based = exploded.select(_id(id_col), h1.alias("__h1"), h2.alias("__h2"))
-    # Aggregate expressions as SQL strings (r13): the Column-object form
-    # costs ~6 py4j round trips per hash function (~200 per call, a
-    # measured ~1.4 s of driver-side build under load); the parsed
-    # expressions are identical, so the plan and values are unchanged.
-    mins = based.groupBy(_id(id_col)).agg(
-        F.expr(f"min((__h1 + 0 * __h2) % {MINHASH_P}) AS __m0"),
+    based = shingle_rows(df, id_col, text_col, shingle_n).selectExpr(
+        _ident(id_col),
         *[
-            F.expr(f"min((__h1 + {k} * __h2) % {MINHASH_P}) AS __m{k}")
-            for k in range(1, num_hashes)
+            f"pmod({hash64_sql('__g', seed, hash_how)}, {MINHASH_P}) AS __h{seed + 1}"
+            for seed in (0, 1)
         ],
+    )
+    # One SQL-text aggregate: the Column-object form costs ~6 py4j round
+    # trips per hash function; the parsed expressions are identical, and
+    # the array is built in the aggregate's result projection.
+    mins = ", ".join(
+        f"min((__h1 + {k} * __h2) % {MINHASH_P})" for k in range(num_hashes)
     )
     # id_col is an IDENTIFIER, not an expression: quoted and escaped, so
     # names holding spaces, dots, hyphens or backticks pass through
-    return mins.selectExpr(
-        _ident(id_col),
-        f"array({', '.join(f'__m{k}' for k in range(num_hashes))}) AS __sig",
-    )
+    return based.groupBy(_id(id_col)).agg(F.expr(f"array({mins}) AS __sig"))
 
 
 def _band_buckets(
@@ -324,26 +317,13 @@ def _band_buckets(
     """(id, __sig, band, bh): split each signature into ``bands`` bands
     and hash each — the LSH bucket key. Shared by self-dedup and
     cross-corpus dedup so both produce identical buckets."""
-    rows_per_band = num_hashes // bands
-    return sig.select(
-        _id(id_col),
+    rpb = num_hashes // bands
+    bh = hash64_sql(f"array_join(slice(__sig, b * {rpb} + 1, {rpb}), ',')", how=hash_how)
+    return sig.selectExpr(
+        _ident(id_col),
         "__sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    hash64(
-                        F.array_join(
-                            F.slice("__sig", b * rows_per_band + 1, rows_per_band), ","
-                        ),
-                        how=hash_how,
-                    ).alias("bh"),
-                ),
-            )
-        ).alias("__b"),
-    ).select(
-        _id(id_col), "__sig", F.col("__b.band").alias("band"), F.col("__b.bh").alias("bh")
+        f"inline(transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'bh', {bh})))",
     )
 
 
@@ -469,32 +449,21 @@ def minhash_lsh_pairs(
         df, id_col, text_col, num_hashes, shingle_n, hash_how
     ).transform(persist_internal)
     banded = _band_buckets(sig, id_col, num_hashes, bands, hash_how)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    a_id, b_id = F.col(f"a.{_ident(id_col)}"), F.col(f"b.{_ident(id_col)}")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (a_id < b_id),
+    a_id, b_id = f"a.{_ident(id_col)}", f"b.{_ident(id_col)}"
+    return (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            F.expr(f"a.band = b.band AND a.bh = b.bh AND {a_id} < {b_id}"),
         )
-        .select(
-            a_id.alias("id_a"),
-            b_id.alias("id_b"),
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("a.__sig", "b.__sig", lambda x, y: (x == y).cast("int")),
-                        lambda v: v == 1,
-                    )
-                )
-                / F.lit(float(num_hashes))
-            ).alias("est_jaccard"),
+        .selectExpr(
+            f"{a_id} AS id_a",
+            f"{b_id} AS id_b",
+            "size(filter(zip_with(a.__sig, b.__sig, (x, y) -> CAST(x = y AS INT)), "
+            f"v -> v = 1)) / {float(num_hashes)!r}D AS est_jaccard",
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(

@@ -1,23 +1,28 @@
-"""Join and projection helpers: salted skew join, wildcard rule join,
+"""Join and projection helpers: equi join, wildcard rule join,
 rank-pick, outer-merge-coalesce, anti/band/theta joins.
 
 Each helper re-expresses a pattern the reference hand-codes:
 
-- salted skew join — reference:
+- skewed equi join — reference:
   notebooks/databricks/sql/sas_conversion_with_manual_salt_skewed_join.sql:161-206
-  (fact gets ``cast(rand()*N as int)`` salt, dim is replicated ×N via a
-  ``RANGE(N)`` cross join, join on (key, salt)).
+  salts the fact side with ``cast(rand()*N as int)``, replicates the dim
+  ×N through a ``RANGE(N)`` cross join and joins on (key, salt). Here it
+  is a plain ``equi_join``: adaptive execution's skew join (on in every
+  session profile, ``session._COMMON``, as in the reference's own
+  ``skewJoin.enabled=true`` at lines 21-27) splits only the partitions
+  that turn out hot at run time, so no dim row is copied. The manual salt
+  copied the whole dim ×max(16, cores) for every key, hot or cold.
 - wildcard rule join + rank pick — reference:
   notebooks/zeppelin/bof_30_migrate.scala:58-168,525-578 (dim ``*`` matches
   anything; ties broken by priority rank).
 - full-outer merge with per-column coalesce — reference:
   notebooks/zeppelin/bof_30_migrate.scala:38-52, notebooks/zeppelin/sap_bw_api.scala:246-255.
 
-Scale notes: AQE skew-join handles skew automatically, but ``salted_join``
-reproduces the reference's deterministic mitigation for engines/configs
-where AQE is off, and is useful when the skew is extreme (a single key
-larger than an executor). Small dims should broadcast — the helpers call
-``F.broadcast`` when the caller marks the dim side small.
+Scale notes: small dims should broadcast — the helpers call
+``F.broadcast`` when the caller marks the dim side small, and the session
+profiles broadcast anything under 50 MB on their own. A shuffled join
+whose key is hot gets its hot partitions split by the skew join
+(``tests/test_relational.py::test_equi_join_hot_key_uses_aqe_skew_join``).
 """
 
 from __future__ import annotations
@@ -39,53 +44,6 @@ def equi_join(
     (the reference steers this via autoBroadcastJoinThreshold=50m)."""
     d = F.broadcast(dim) if broadcast_dim else dim
     return fact.join(d, on, how)
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "inner",
-    salt_n: int | None = None,
-    salt_col: str = "__salt",
-) -> DataFrame:
-    """Skew-mitigating join: salt the fact side with a uniform random int in
-    [0, salt_n), replicate the dim side ×salt_n (cross join against
-    ``spark.range(salt_n)``), and join on (keys..., salt).
-
-    Result is row-identical to the unsalted join for ANY salt_n (the dim
-    side carries every salt value, so each fact row matches exactly its
-    unsalted matches); the hot key's rows are spread over ``salt_n``
-    shuffle partitions. The default ``salt_n=None`` resolves to
-    ``max(16, defaultParallelism)``: a hot key can occupy at most salt_n
-    reducers, so a fan-out below the cluster's parallelism leaves cores
-    idle during the skewed stage — on a 1000-executor cluster a fixed 16
-    caps the hot key at 16 tasks. 16 is kept as the documented FLOOR
-    because it is the reference's fixed fan-out
-    (sas_conversion_with_manual_salt_skewed_join.sql:30, sized for its
-    fixed cluster) and because replicating the dim below 16× buys no
-    meaningful replication savings.
-
-    Only fact-preserving join types are allowed: with the dim replicated
-    ×salt_n, right/full outer would emit every UNMATCHED dim row once per
-    salt value. For those, salt the other side or use AQE skew handling.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti", "semi", "anti"):
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only, got how={how!r}: "
-            "the replicated dim side would duplicate unmatched dim rows "
-            "salt_n times under right/full outer"
-        )
-    keys = [on] if isinstance(on, str) else list(on)
-    spark = fact.sparkSession
-    if salt_n is None:
-        salt_n = max(16, spark.sparkContext.defaultParallelism)
-    salt_ids = spark.range(salt_n).select(F.col("id").cast("int").alias(salt_col))
-    salted_fact = fact.withColumn(salt_col, (F.rand(seed=42) * salt_n).cast("int"))
-    # Dim replication is a broadcast of a small cross product — never a shuffle.
-    salted_dim = dim.crossJoin(F.broadcast(salt_ids))
-    out = salted_fact.join(salted_dim, keys + [salt_col], how)
-    return out.drop(salt_col)
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

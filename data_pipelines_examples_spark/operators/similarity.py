@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist_internal
+from .dedup import _ident
 
 
 def _rebalance(df: DataFrame) -> DataFrame:
@@ -41,21 +42,43 @@ def _rebalance(df: DataFrame) -> DataFrame:
     return ensure_parallelism(df)
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<float/double> columns, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# The vector math is Spark SQL text over SQL expressions (quote a column
+# name with ``_ident``), so a caller parses its whole projection in one
+# py4j call; a Column-builder tree costs one per node and per lambda.
+# Each is a left-to-right fold starting at 0.0, the order the DuckDB
+# oracles replay.
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+def dot(a: str, b: str) -> str:
+    """Dot product of two array<float/double> expressions, JVM-side."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def norm(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
+
+
+def cosine(a: str, b: str) -> str:
+    return f"{dot(a, b)} / ({norm(a)} * {norm(b)})"
+
+
+def _scored(
+    pairs: DataFrame, id_col: str, vec_col: str, query_id_col: str, query_vec_col: str
+) -> DataFrame:
+    """(query_id, id, cosine_sim) of the joined (query, corpus) rows; the
+    norms ``__cn``/``__qn`` were computed once per vector before the join."""
+    qid, cid = _ident(query_id_col), _ident(id_col)
+    dots = dot(_ident(vec_col), _ident(query_vec_col))
+    return pairs.selectExpr(qid, cid, f"{dots} / (__cn * __qn) AS cosine_sim")
+
+
+def _top_k(scored: DataFrame, k: int, id_col: str, query_id_col: str) -> DataFrame:
+    """Rank 1..k per query, by cosine desc with ties broken by corpus id."""
+    qid, cid = _ident(query_id_col), _ident(id_col)
+    return scored.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {qid} ORDER BY cosine_sim DESC, {cid}) AS `rank`",
+    ).filter(f"`rank` <= {int(k)}")
 
 
 def brute_force_topk(
@@ -76,27 +99,16 @@ def brute_force_topk(
     # Norms factor out of the pair loop: corpus-side once per vector,
     # query-side once per query before the broadcast. Same expressions →
     # bit-identical cosine values, 1 HOF fold per scored pair instead of 3.
-    c = _rebalance(corpus).withColumn("__cn", norm(F.col(vec_col)))
-    q = queries.withColumn("__qn", norm(F.col(query_vec_col)))
-    scored = c.crossJoin(F.broadcast(q)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (
-            dot(F.col(vec_col), F.col(query_vec_col))
-            / (F.col("__cn") * F.col("__qn"))
-        ).alias("cosine_sim"),
-    )
+    c = _rebalance(corpus).selectExpr("*", f"{norm(_ident(vec_col))} AS __cn")
+    q = queries.selectExpr("*", f"{norm(_ident(query_vec_col))} AS __qn")
+    scored = _scored(c.crossJoin(F.broadcast(q)), id_col, vec_col, query_id_col, query_vec_col)
     if exclude_self:
-        scored = scored.filter(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        scored = scored.filter(f"{_ident(query_id_col)} != {_ident(id_col)}")
+    return _top_k(scored, k, id_col, query_id_col)
 
 
-def _lit_double_array(values: list[float]) -> Column:
-    """Double-array literal built from ONE parsed SQL string. The
+def _sql_double_array(values: list[float]) -> str:
+    """Double-array literal as Spark SQL text, parsed in ONE call. The
     ``F.array(*[F.lit(float(x)) ...])`` form costs a py4j round trip per
     element — for 64-dim planes that is ~65 JVM calls per literal and was
     the dominant driver-side build cost of ``lsh_topk`` (measured ~0.5 s
@@ -111,17 +123,19 @@ def _lit_double_array(values: list[float]) -> Column:
     bad = [x for x in values if not math.isfinite(float(x))]
     if bad:
         raise ValueError(
-            f"_lit_double_array: non-finite element(s) {bad[:3]} — planes/"
+            f"_sql_double_array: non-finite element(s) {bad[:3]} — planes/"
             "centroids must be finite floats"
         )
-    return F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")")
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
 
 
-def hyperplane_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
+def hyperplane_bucket(vec_col: str, planes: list[list[float]]) -> Column:
+    """Random-hyperplane LSH bucket id of the array column named
+    ``vec_col``: bit i = sign(vec · plane_i).
 
     ``planes`` are driver-side constants (seeded), embedded as array
-    literals — the signature computation is a pure projection.
+    literals — the signature computation is a pure projection, parsed
+    from one SQL string.
 
     Why the HOF ``dot`` and not an unrolled codegen sum: a fully unrolled
     ``vec[0]·p0 + vec[1]·p1 + …`` chain for 48 planes × 64 dims lands a
@@ -132,12 +146,12 @@ def hyperplane_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
     cost but stays bounded, partition-local, and bit-identical to the
     DuckDB oracle's replay of the same left-associative sequence.
     """
-    bucket = F.lit(0).cast("long")
+    v = _ident(vec_col)
+    bucket = "CAST(0 AS BIGINT)"
     for plane in planes:
-        plane_col = _lit_double_array(plane)
-        bit = (dot(vec_col, plane_col) > 0).cast("long")
-        bucket = F.shiftleft(bucket, 1) + bit
-    return bucket
+        bit = f"CAST({dot(v, _sql_double_array(plane))} > 0 AS BIGINT)"
+        bucket = f"shiftleft({bucket}, 1) + {bit}"
+    return F.expr(bucket)
 
 
 def hyperplane_buckets_arrow(
@@ -206,24 +220,21 @@ def lsh_topk(
     """Approximate top-k: only corpus vectors in the query's hyperplane
     bucket are scored. Recall improves with fewer planes (bigger buckets)
     or by unioning multiple plane sets (multi-table LSH)."""
-    c = (
-        _rebalance(corpus)
-        .withColumn("__bucket", hyperplane_bucket(F.col(vec_col), planes))
-        .withColumn("__cn", norm(F.col(vec_col)))
+    c = _rebalance(corpus).select(
+        "*",
+        hyperplane_bucket(vec_col, planes).alias("__bucket"),
+        F.expr(norm(_ident(vec_col))).alias("__cn"),
     )
-    q = queries.withColumn(
-        "__qbucket", hyperplane_bucket(F.col(query_vec_col), planes)
-    ).withColumn("__qn", norm(F.col(query_vec_col)))
-    scored = c.join(F.broadcast(q), F.col("__bucket") == F.col("__qbucket")).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (
-            dot(F.col(vec_col), F.col(query_vec_col))
-            / (F.col("__cn") * F.col("__qn"))
-        ).alias("cosine_sim"),
-    ).filter(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = queries.select(
+        "*",
+        hyperplane_bucket(query_vec_col, planes).alias("__qbucket"),
+        F.expr(norm(_ident(query_vec_col))).alias("__qn"),
+    )
+    pairs = c.join(F.broadcast(q), F.expr("__bucket = __qbucket"))
+    scored = _scored(pairs, id_col, vec_col, query_id_col, query_vec_col).filter(
+        f"{_ident(query_id_col)} != {_ident(id_col)}"
+    )
+    return _top_k(scored, k, id_col, query_id_col)
 
 
 def kmeans_centroids(
@@ -255,7 +266,7 @@ def _nearest_centroids(vec_col: Column, centroids: list[list[float]], n: int) ->
     expressions: per-centroid distance structs, array_sort, slice."""
     dists = []
     for i, c in enumerate(centroids):
-        cc = _lit_double_array(c)
+        cc = F.expr(_sql_double_array(c))
         d2 = F.aggregate(
             F.zip_with(vec_col, cc, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
@@ -286,29 +297,21 @@ def ivf_topk(
     narrow projection computed once and persisted alongside the vectors;
     queries broadcast.
     """
-    c = _rebalance(corpus).withColumn(
-        "__bucket", _nearest_centroids(F.col(vec_col), centroids, 1)[0]
-    ).withColumn("__cn", norm(F.col(vec_col)))
-    q = queries.withColumn(
-        "__probes", _nearest_centroids(F.col(query_vec_col), centroids, n_probe)
-    ).withColumn("__qn", norm(F.col(query_vec_col)))
-    scored = (
-        c.join(
-            F.broadcast(q),
-            F.array_contains(F.col("__probes"), F.col("__bucket")),
-        )
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            (
-                dot(F.col(vec_col), F.col(query_vec_col))
-                / (F.col("__cn") * F.col("__qn"))
-            ).alias("cosine_sim"),
-        )
+    c = _rebalance(corpus).select(
+        "*",
+        _nearest_centroids(F.col(vec_col), centroids, 1)[0].alias("__bucket"),
+        F.expr(norm(_ident(vec_col))).alias("__cn"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = queries.select(
+        "*",
+        _nearest_centroids(F.col(query_vec_col), centroids, n_probe).alias("__probes"),
+        F.expr(norm(_ident(query_vec_col))).alias("__qn"),
+    )
+    pairs = c.join(F.broadcast(q), F.expr("array_contains(__probes, __bucket)")).filter(
+        f"{_ident(query_id_col)} != {_ident(id_col)}"
+    )
+    scored = _scored(pairs, id_col, vec_col, query_id_col, query_vec_col)
+    return _top_k(scored, k, id_col, query_id_col)
 
 
 def embedding_dedup_pairs(
@@ -328,7 +331,7 @@ def embedding_dedup_pairs(
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", cosine(F.col("__va"), F.col("__vb")))
+        .withColumn("cosine_sim", F.expr(cosine("__va", "__vb")))
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
@@ -498,19 +501,19 @@ def embedding_dedup_pairs_lsh(
     va = raw.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("__va"),
-        norm(F.col(vec_col)).alias("__na"),
+        F.expr(norm(_ident(vec_col))).alias("__na"),
     )
     vb = raw.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("__vb"),
-        norm(F.col(vec_col)).alias("__nb"),
+        F.expr(norm(_ident(vec_col))).alias("__nb"),
     )
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn(
             "cosine_sim",
-            dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
+            F.expr(f"{dot('__va', '__vb')} / (__na * __nb)"),
         )
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
@@ -711,7 +714,7 @@ def semantic_dedup_pairs(
     return (
         a.join(b, ["cluster"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", cosine(F.col("__va"), F.col("__vb")))
+        .withColumn("cosine_sim", F.expr(cosine("__va", "__vb")))
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cluster", "cosine_sim")
     )

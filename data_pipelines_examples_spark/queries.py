@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 from .operators.dedup import dedup_exact, scd_latest
 from .operators.intervals import collapse_intervals
 from .operators.json_ops import shred_json
-from .operators.relational import band_join, rank_pick, salted_join, wildcard_rule_join
-from .operators.similarity import cosine
+from .operators.relational import band_join, equi_join, rank_pick, wildcard_rule_join
 from .operators.unpivot import unpivot
 from .operators.windows import cumulative_sum, sliding_range_agg
 
@@ -598,15 +597,16 @@ def q06_cumulative_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q07_salted_join_priority_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted skew join — row-identical to the plain join, hot keys spread
-    over max(16, defaultParallelism) salt partitions (r10: the fan-out
-    tracks cluster parallelism; the reference's fixed 16 is the floor —
-    notebooks/databricks/sql/sas_conversion_with_manual_salt_skewed_join.sql:161-206)."""
+    """The reference's skewed join (its manual salt:
+    notebooks/databricks/sql/sas_conversion_with_manual_salt_skewed_join.sql:161-206)
+    as a plain equi join: adaptive execution's skew join splits a hot
+    key's partitions at run time, so ``orders`` is never copied per salt
+    value. The name keeps the reference's pattern it reproduces."""
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
     )
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    joined = salted_join(li, o, "o_orderkey")
+    joined = equi_join(li, o, "o_orderkey")
     return (
         joined.groupBy("o_orderpriority")
         .agg(_dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n_items"))
@@ -928,20 +928,20 @@ def q14_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline: JVM-side zip_with/aggregate dot
     products, broadcast query set, one shuffle keyed by query_id."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    emb = _t(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS embedding"
     )
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    queries_df = emb.filter("vec_id < 5").selectExpr(
+        "vec_id AS query_id", "embedding AS query_vec"
     )
     from .operators.similarity import brute_force_topk
 
     out = brute_force_topk(emb, queries_df, k=10, exclude_self=True)
-    return out.select(
+    return out.selectExpr(
         "query_id",
         "vec_id",
-        F.round("cosine_sim", 6).alias("cosine_sim"),
-        F.col("rank").cast("bigint").alias("rank"),
+        "round(cosine_sim, 6) AS cosine_sim",
+        "CAST(`rank` AS BIGINT) AS `rank`",
     )
 
 

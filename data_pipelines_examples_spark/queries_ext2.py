@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import dedup_by_key
 from .operators.json_ops import json_to_map
-from .operators.relational import salted_join
+from .operators.relational import equi_join
 from .operators.unpivot import unpivot
 from .operators.windows import approx_distinct_over_range, sliding_range_agg
 from .oracles import (
@@ -168,10 +168,12 @@ def q39_one_hot_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q40_sas_composite_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAS-conversion composite: salted skew join → stack unpivot →
+    """The SAS-conversion composite: skewed join → stack unpivot →
     dropDuplicates on the business key → aggregate (reference:
     sas_conversion_with_manual_salt_skewed_join.sql:161-255; BASELINE bench
-    shape 2). Filters apply before the unpivot fan-out."""
+    shape 2). The reference's manual salt is a plain equi join here;
+    adaptive execution's skew join splits hot partitions at run time.
+    Filters apply before the unpivot fan-out."""
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"),
         "l_linenumber",
@@ -179,7 +181,7 @@ def q40_sas_composite_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linestatus",
     )
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    joined = salted_join(li, o, "o_orderkey").withColumnRenamed(
+    joined = equi_join(li, o, "o_orderkey").withColumnRenamed(
         "o_orderkey", "l_orderkey"
     )
     long_df = unpivot(

@@ -522,11 +522,15 @@ def write_jdbc_idempotent(
     ``jdbc_execute_update`` and Spark's JDBC writer (driver jar must be on
     the classpath; Spark's bundled Derby exercises this end-to-end in
     tests/test_jdbc_derby.py). With ``validate`` the partition's post-write
-    row count is read back through the same connection and compared."""
+    row count is read back through the same connection and compared.
+
+    The source is cached and counted AFTER the write, which fills the
+    cache (counting first cost its own materialization job, as in
+    ``write_validated``). So ``df`` is first read after the DELETE: it
+    must not read the partition it replaces."""
     spark = df.sparkSession
     df = df.cache()
     try:
-        expected = df.count()
         if delete_fn is not None:
             delete_fn(partition_predicate)
         else:
@@ -541,6 +545,7 @@ def write_jdbc_idempotent(
             write_fn(out)
         else:
             out.write.mode("append").jdbc(url, table, properties=properties or {})
+        expected = _count(df)
         if validate:
             from .readers import read_jdbc_pushdown
 

@@ -96,3 +96,47 @@ def test_jdbc_validation_catches_shortfall(spark, derby):
         write_jdbc_idempotent(
             d1, derby, "target", "load_date = 20240101", PROPS, write_fn=write_then_tamper
         )
+
+
+def _jobs(spark, group: str, fn):
+    """(fn's result, the number of Spark jobs it ran under its own group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jdbc_load_counts_after_the_write(spark, derby):
+    """The source is counted after the write has filled its cache: the
+    same count as counting first (the earlier order, written out here),
+    one Spark job fewer."""
+    pred = "load_date = 20240101"
+
+    def count_first():
+        df = _partition(spark, 20240101, 7).cache()
+        try:
+            expected = df.count()
+            jdbc_execute_update(spark, derby, f"DELETE FROM target WHERE {pred}")
+            df.repartition(5).write.mode("append").jdbc(derby, "target", properties=PROPS)
+            actual = read_jdbc_pushdown(
+                spark, derby, f"SELECT COUNT(*) AS n FROM target WHERE {pred}", PROPS
+            ).first()[0]
+            assert int(actual) == expected
+            return expected
+        finally:
+            df.unpersist()
+
+    want, ref_jobs = _jobs(spark, "jdbc-count-first", count_first)
+    got, jobs = _jobs(
+        spark,
+        "jdbc-count-after",
+        lambda: write_jdbc_idempotent(
+            _partition(spark, 20240101, 7), derby, "target", pred, PROPS
+        ),
+    )
+    assert got == want == 7
+    assert jobs == ref_jobs - 1, (jobs, ref_jobs)

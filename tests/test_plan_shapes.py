@@ -432,3 +432,60 @@ def test_cooccurrence_pairs_no_basket_selfjoin(spark):
     # per pair column, zero SortMergeJoin/ShuffledHashJoin operators
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
     assert count_shuffles(pairs) <= 7, physical_plan(pairs)
+
+
+def _py4j_calls(monkeypatch, build) -> int:
+    """py4j round trips (``ClientServerConnection.send_command``) that
+    ``build`` makes. Nothing is executed: this is the driver-side cost of
+    building a plan."""
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls[0] += 1
+        return real(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        build()
+    return calls[0]
+
+
+def test_operator_builds_stay_few_py4j_calls(spark, monkeypatch):
+    """q15 (cosine top-k), q33 (MinHash LSH pairs) and the ingest drain's
+    band frame build their projections from SQL text: one parsed
+    expression per projection, not one py4j call per Column node and
+    lambda. On these tables the Column-builder forms cost 682 / 1,032 /
+    1,200 calls per build and the SQL-text forms 81 / 123 / 93. Each
+    build may cost at most 1.5× the SQL-text count."""
+    from data_pipelines_examples_spark import release_cached
+    from data_pipelines_examples_spark.operators.dedup import (
+        _band_buckets,
+        minhash_signatures,
+    )
+    from data_pipelines_examples_spark.queries import queries
+
+    fns = queries()
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+
+    def band_frame():
+        return _band_buckets(
+            minhash_signatures(docs, "doc_id", "text", 32, 3, "xxhash64"),
+            "doc_id", 32, 8, "xxhash64",
+        ).select("doc_id", "band", "bh")
+
+    builds = {
+        "q15_embedding_topk": lambda: fns["q15_embedding_topk"](spark, SF_SMOKE),
+        "q33_minhash_candidates": lambda: fns["q33_minhash_candidates"](spark, SF_SMOKE),
+        "band_frame": band_frame,
+    }
+    measured = {"q15_embedding_topk": 81, "q33_minhash_candidates": 123, "band_frame": 93}
+    try:
+        for name, build in builds.items():
+            build()  # the first build opens the tables (memoized)
+            calls = _py4j_calls(monkeypatch, build)
+            assert 0 < calls <= 1.5 * measured[name], (name, calls)
+    finally:
+        release_cached()

@@ -1,4 +1,4 @@
-"""Unit tests for join helpers: salted join equivalence, wildcard rules,
+"""Unit tests for join helpers: hot-key equi join, wildcard rules,
 rank pick, outer-merge-coalesce, band join."""
 
 from __future__ import annotations
@@ -7,61 +7,60 @@ from pyspark.sql import functions as F
 
 from data_pipelines_examples_spark.operators.relational import (
     band_join,
+    equi_join,
     outer_merge_coalesce,
     rank_pick,
-    salted_join,
     wildcard_rule_join,
 )
 
 
-def test_salted_join_matches_plain_join(spark):
-    fact = spark.createDataFrame(
-        [(i % 3, f"v{i}") for i in range(100)], "k int, v string"
+# Confs that make a small fixture look skewed to adaptive execution: no
+# broadcast (the join must shuffle), and a partition counts as skewed at
+# 2× the median and 1 KB instead of 5× and 256 MB.
+_SKEW_CONFS = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+}
+
+
+def test_equi_join_hot_key_uses_aqe_skew_join(spark):
+    """The reference's manual salt (sas_conversion_with_manual_salt_skewed_join.sql)
+    is a plain ``equi_join`` here: one key holds 60% of the fact rows,
+    the join shuffles, and adaptive execution's skew join splits the hot
+    partition at run time. Rows (inner, and left with unmatched fact
+    keys) equal a driver-side reference."""
+    n, hot = 20_000, 12_000
+    fact = spark.range(n).selectExpr(
+        f"CASE WHEN id < {hot} THEN 0 ELSE id % 1000 END AS k", "id AS v"
     )
-    dim = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k int, name string")
-    plain = fact.join(dim, "k").groupBy("name").count()
-    salted = salted_join(fact, dim, "k", salt_n=8).groupBy("name").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    fact = spark.createDataFrame([(1, "x"), (9, "y")], "k int, v string")
-    dim = spark.createDataFrame([(1, "a")], "k int, name string")
-    out = salted_join(fact, dim, "k", how="left", salt_n=4)
-    rows = {(r.k, r.name) for r in out.collect()}
-    assert rows == {(1, "a"), (9, None)}
-
-
-def test_salted_join_default_salt_tracks_parallelism(spark):
-    """r10: salt_n=None resolves to max(16, defaultParallelism) — a hot
-    key can occupy at most salt_n reducers, so the fan-out must track the
-    cluster's core count (the reference's fixed 16 stays as the floor).
-    Pin the resolved fan-out by counting the replicated dim's salt
-    domain, and the row-identity invariant under the default."""
-    fact = spark.createDataFrame(
-        [(i % 2, f"v{i}") for i in range(50)], "k int, v string"
+    dim = spark.range(1000).filter("id % 7 != 3").selectExpr(
+        "id AS k", "concat('n', CAST(id AS STRING)) AS name"
     )
-    dim = spark.createDataFrame([(0, "a"), (1, "b")], "k int, name string")
-    out = salted_join(fact, dim, "k", salt_col="__s_probe")
-    expected_n = max(16, spark.sparkContext.defaultParallelism)
-    # the salt column is dropped from the result; re-derive the fan-out
-    # from the replicated-dim plan: range(salt_n) appears in the plan
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert f"Range (0, {expected_n}" in plan, plan
-    plain = fact.join(dim, "k").groupBy("name").count()
-    got = salted_join(fact, dim, "k").groupBy("name").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, got.collect()))
-
-
-def test_salted_join_rejects_dim_preserving_outer(spark):
-    import pytest
-
-    fact = spark.createDataFrame([(1, "x")], "k int, v string")
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], "k int, name string")
-    # right/full outer would emit unmatched dim rows once per salt value
-    for how in ("right", "right_outer", "full", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="fact-preserving"):
-            salted_join(fact, dim, "k", how=how, salt_n=4)
+    names = {k: f"n{k}" for k in range(1000) if k % 7 != 3}
+    keys = [0 if v < hot else v % 1000 for v in range(n)]
+    assert keys.count(0) / n >= 0.5
+    expected = {
+        "inner": sorted((k, v, names[k]) for v, k in enumerate(keys) if k in names),
+        "left": sorted((k, v, names.get(k)) for v, k in enumerate(keys)),
+    }
+    saved = {key: spark.conf.get(key, None) for key in _SKEW_CONFS}
+    try:
+        for key, value in _SKEW_CONFS.items():
+            spark.conf.set(key, value)
+        for how in ("inner", "left"):
+            out = equi_join(fact, dim, "k", how=how)
+            got = sorted((r.k, r.v, r.name) for r in out.collect())
+            assert got == expected[how], how
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "skew=true" in plan, plan
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def test_wildcard_rule_join_priority(spark):

@@ -7,9 +7,10 @@
    its shared cache entry to a concurrent drain. Pinned as a LOCK
    INVARIANT (persist/unpersist only run while the registry lock is
    owned) plus a cross-thread behavioral check.
-2. salted_join's parallelism-aware default is pinned in
-   tests/test_relational.py; the itemsets unguarded null-basket fix in
-   tests/test_property_funnel.py.
+2. The itemsets unguarded null-basket fix is pinned in
+   tests/test_property_funnel.py. (The round also pinned salted_join's
+   parallelism-aware default; the operator has since been deleted in
+   favour of a plain join under AQE skew handling.)
 """
 
 from __future__ import annotations

@@ -115,7 +115,7 @@ def test_arrow_buckets_bit_identical_to_expression_fold(spark):
     tables = gauss_plane_tables(n_tables=4, n_planes=7, dim=dim, seed=99)
 
     expr_cols = [
-        hyperplane_bucket(F.col("embedding"), p).alias(f"b{t}")
+        hyperplane_bucket("embedding", p).alias(f"b{t}")
         for t, p in enumerate(tables)
     ]
     expr = {
