@@ -71,7 +71,7 @@ def shred_json(
     under codegen subexpression elimination); string-typed and nested
     paths pay a get_json_object guarded by the probe.
 
-    Extraction-route contract (r5 ADVICE): a STRING-typed output always
+    Extraction-route contract (r5): a STRING-typed output always
     comes from ``get_json_object``, in strict and lenient mode alike —
     the map parse and the path extractor are different parsers, and for
     raw string outputs any divergence in how they serialize a nested

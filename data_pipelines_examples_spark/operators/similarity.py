@@ -377,7 +377,7 @@ def auto_plane_tables(
 
     The dimension probe skips null embeddings and raises if every
     embedding is null; min/max vector sizes ride the SAME single
-    aggregate (r13 ADVICE — one-job cost), so a corpus with MIXED
+    aggregate (r13 — one-job cost), so a corpus with MIXED
     dimensions now raises instead of silently folding short vectors in
     the signature stage. The size guard compares against ``dim > 0``
     rather than NULL so it stays robust under

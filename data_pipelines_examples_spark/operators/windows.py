@@ -109,7 +109,7 @@ def global_cumulative_sum(
         try:
             n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
         except ValueError:
-            # Narrow catch (r13 ADVICE): only the Spark-Connect failure
+            # Narrow catch (r13): only the Spark-Connect failure
             # modes (no sparkContext attribute / not-implemented) degrade
             # to the default — an unrelated session failure must surface,
             # not silently pin n=200.

@@ -60,8 +60,8 @@ def _ensure_confs(spark: SparkSession) -> None:
 # Keyed by (session, dir, table, mtime): a regenerated testdata dir gets
 # a fresh scan plan (the file index inside a plan is pinned at read time
 # — same as before, but the mtime key bounds cross-call staleness), and
-# a new SparkSession never sees another session's plans. r14 hardening
-# (r13 ADVICE): the session key is a WeakKeyDictionary, so a stopped
+# a new SparkSession never sees another session's plans. r14 hardening:
+# the session key is a WeakKeyDictionary, so a stopped
 # session's plans (and their JVM-side references) drop with it instead
 # of pinning for the process lifetime, and the mtime is the MAX over
 # the path and any part files inside a directory table — a single part
@@ -179,187 +179,16 @@ def _load_all() -> None:
     )
 
 
-# The driver grades at most the first 50 catalog entries. These entries
-# register last so every graded slot goes to a hash-verifiable query and
-# the window tracks the NEWEST operator surface: q41 is
-# approximate-by-design (HLL sketch — no oracle can exist; its exact twin
-# q12 is graded), and the others are near-twins of graded shapes
-# (q10≈q05 latest-per-key, q19≈q06 cumulative sum, q25/q26/q27 covered by
-# the graded q09/q36/q40/q12 families, q46 right-outer mirrors the
-# q02/q38 join family, q53 first/last overlaps q05's rank-pick family —
-# the last two retired to promote q59_redact_pii/q60_repetition_ratios
-# into the window; round 4 additionally retires q30 group-max join-back
-# (same latest-per-key family as the graded q05/q49), q47 SQL text
-# pipeline (mirrors the graded q14 text-profile family), q50 ROLLUP
-# (hierarchical special case of the graded q61 GROUPING SETS), and q57
-# doclen histogram (profiling family with the graded q56) to promote
-# q61/q62/q63/q64 — grouping sets, duplicate components, chunking,
-# sequence packing). Round 5 retires six more near-twins to promote
-# q65-q70 (epoch shuffle, quality floor, surprisal, materialized
-# sequences, cross-corpus dedup, Z-order keys): q48 full-probe IVF is
-# definitionally identical to the graded q15 brute-force top-k (the
-# equality is ALSO pinned in tests/test_similarity.py), q36 map-key
-# filters share the graded q09 JSON/map family, q22 streaks share the
-# graded q03 gaps-and-islands family, q44 re-aggregation shares the
-# graded q06/q24 rollup family, q39 CASE one-hot shares the graded q54
-# conditional-aggregate family, and q21 NTILE shares the graded q52
-# quantile family. All stay in the catalog, locally oracle-checked,
-# and pytest-pinned.
-# ROUND-5 ROTATION — EXECUTED. The grading-window debt (round-4 verdict:
-# 56 of 106 entries the driver never saw) is paid by PROMOTING every
-# never-driver-graded oracled entry to the front of the catalog:
-# q77-q108 (the whole session-2 surface — span dedup, SCD2/CDC/temporal,
-# winnowing, batch BM25, fuzzy join, resample/gaps, contamination,
-# budget selection, NFC, checksum, analytics family) all carry local
-# hash-verification and now occupy graded slots. The 20 slots after
-# them go to the head of the classic catalog (q01-q24: flagship
-# interval collapse, salted join, JSON shred, ANN top-k, theta join —
-# one representative per foundational family). Entries sliding OUT of
-# the window (q29-q76 band) all have green driver rows in
-# CORRECTNESS_r04 — cumulative driver coverage after this round is the
-# entire oracled catalog. Window composition is pinned by
-# tests/test_grading_window.py.
-# ROUND-6 ROTATION — the window is now driven by a staleness policy,
-# pinned by tests/test_grading_window.py against the committed
-# CORRECTNESS_r*.json history: every oracled entry whose last
-# driver-green row is older than (latest_round − 1), or that has never
-# been driver-green, MUST occupy a graded slot. Round 6 graded the 26
-# stale entries (never-green q25/q64/q41 + r1-r3 band) plus the oldest
-# 24 r4-green entries — all 48 oracled ones came back hash-green in
-# CORRECTNESS_r06. q87/q88 took graded slots ONCE for the driver's
-# weaker rows-only record; the driver records `no_oracle` and skips
-# unoracled entries entirely, so that experiment is CONCLUDED — they
-# are rotated out permanently (their xxhash64 semantics stay verified
-# via the hash-graded portable twins q33/q34; see NO_ORACLE_ALLOWED in
-# tests/test_grading_window.py).
-# ROUND-7 ROTATION (this window): the only stale entries (last green
-# r4) are q70-q76 — they head the window. Per the no-wasted-slot rule,
-# the remaining 43 slots go to r5-green entries in catalog order
-# (q01-q23 band, then q77-q102); the 7 r5-green leftovers (q103-q109)
-# wait for r8 and everything displaced is green in CORRECTNESS_r06.
-# The round this window was PLANNED FOR: the staleness tests evaluate
-# the rotation against the correctness history that existed when the
-# window was planned (rounds < _WINDOW_ROUND), so they stay green when
-# the driver drops THIS round's CORRECTNESS file mid-judging — the r6
-# formulation keyed off "latest file present" and was designed-red at
-# every judging. Rotating the window for round N+1 means: edit
-# _PROMOTED per the policy AND bump this to N+1. Forgetting entirely is
-# caught by the rolling-coverage alarm (every oracled entry green
-# within the last 3 graded rounds) in tests/test_grading_window.py.
-# ROUND-8 ROTATION: the only stale entries (last green r5, deferred
-# from r7 by design) were q103-q109 — they headed the window; 43 slots
-# filled with r6-green entries oldest-first (q10-q64 band); the 5
-# r6-green leftovers (q65-q69) waited for r9. All 50 came back
-# hash-green in CORRECTNESS_r08.
-# ROUND-9 ROTATION (this window, computed by tools/plan_rotation.py on
-# the committed r1-r8 history): the only stale entries (last green r6,
-# deferred from r8 by design) are q65-q69 — they head the window. The
-# remaining 45 slots fill with r7-green entries oldest-first in catalog
-# order (q01-q23 band, then q70-q97); the 5 r7-green leftovers
-# (q98-q102) wait for round 10 and everything displaced is green in
-# CORRECTNESS_r08.
-# ROUND-10 ROTATION (this window, computed by tools/plan_rotation.py on
-# the committed r1-r9 history): the only stale entries (last green r7,
-# deferred from r9 by design) are q98-q102 — they head the window. The
-# remaining 45 slots fill with r8-green entries oldest-first in catalog
-# order (q10-q64 band, then q103-q104); the 5 r8-green leftovers
-# (q105-q109) wait for round 11 and everything displaced is green in
-# CORRECTNESS_r09.
-# ROUND-11 ROTATION (this window, computed by tools/plan_rotation.py on
-# the committed r1-r10 history): the only stale entries (last green r8,
-# deferred from r10 by design) are q105-q109 — they head the window,
-# which also driver-grades q106 (distributed cumsum, landed r10) and
-# q109 (binned+pinned plan, landed r9) for the first time under their
-# current plans. The remaining 45 slots fill with r9-green entries
-# oldest-first in catalog order (q01-q23 band, then q65-q92); the 5
-# r9-green leftovers (q93-q97) wait for round 12 and everything
-# displaced is green in CORRECTNESS_r10.
-# ROUND-12 ROTATION (this window, computed by tools/plan_rotation.py on
-# the committed r1-r11 history): the only stale entries (last green r9,
-# deferred from r11 by design) are q93-q97 — they head the window. The
-# remaining 45 slots fill with r10-green entries oldest-first in
-# catalog order (q10-q64 band, then q98-q99); the 5 r10-green leftovers
-# (q100-q104) wait for round 13 and everything displaced is green in
-# CORRECTNESS_r11.
-_WINDOW_ROUND = 12
-
-_PROMOTED = [
-    "q93_hourly_resample_asof",  # stale
-    "q94_event_feed_gaps",  # stale
-    "q95_contamination_report",  # stale
-    "q96_budget_selection",  # stale
-    "q97_copurchase_pairs",  # stale
-    "q10_scd_latest_event_per_user",  # green r10
-    "q19_customer_running_spend",  # green r10
-    "q21_acctbal_quartiles",  # green r10
-    "q22_user_value_streaks",  # green r10
-    "q24_region_revenue_rollup",  # green r10
-    "q25_map_payload_roundtrip",  # green r10
-    "q26_union_dedup_pairs",  # green r10
-    "q27_distinct_users_by_type",  # green r10
-    "q28_transitive_closure",  # green r10
-    "q29_fiscal_date_functions",  # green r10
-    "q30_group_max_join_back",  # green r10
-    "q31_ngram_jaccard_pairs",  # green r10
-    "q33_minhash_candidates",  # green r10
-    "q34_simhash_pairs",  # green r10
-    "q36_map_key_filter",  # green r10
-    "q37_string_functions",  # green r10
-    "q38_null_safe_join",  # green r10
-    "q39_one_hot_segments",  # green r10
-    "q40_sas_composite_shape",  # green r10
-    "q41_approx_sliding_distinct",  # green r10
-    "q44_hourly_rollup",  # green r10
-    "q45_schema_evolution_union",  # green r10
-    "q46_right_outer_fill",  # green r10
-    "q42_embedding_dedup_pairs",  # green r10
-    "q43_lsh_topk",  # green r10
-    "q47_sql_text_pipeline",  # green r10
-    "q48_ivf_topk_full_probe",  # green r10
-    "q49_asof_latest_event_value",  # green r10
-    "q50_region_nation_rollup",  # green r10
-    "q51_status_pivot",  # green r10
-    "q52_price_percentiles",  # green r10
-    "q53_first_last_order_value",  # green r10
-    "q54_filtered_aggregates",  # green r10
-    "q55_shipping_priority",  # green r10
-    "q56_vocab_top_tokens",  # green r10
-    "q57_doclen_histogram",  # green r10
-    "q58_training_mix",  # green r10
-    "q59_redact_pii",  # green r10
-    "q60_repetition_ratios",  # green r10
-    "q61_grouping_sets_revenue",  # green r10
-    "q62_duplicate_components",  # green r10
-    "q63_chunk_documents",  # green r10
-    "q64_pack_offsets",  # green r10
-    "q98_normalize_text",  # green r10
-    "q99_corpus_checksum",  # green r10
-]
-# Nothing needs active demotion this round: the window is exactly
-# _PROMOTED (50 entries), and all other entries follow in registration
-# order past the graded boundary.
-_DEPRIORITIZED: list[str] = []
-
-
-def _ordered(d: dict) -> dict:
-    front = {k: d[k] for k in _PROMOTED if k in d}
-    head = {
-        k: v
-        for k, v in d.items()
-        if k not in _DEPRIORITIZED and k not in front
-    }
-    tail = {k: d[k] for k in _DEPRIORITIZED if k in d}
-    return {**front, **head, **tail}
-
-
 def queries() -> dict[str, QueryFn]:
+    """Every catalog entry in registration order (a copy: callers cannot
+    mutate the registry)."""
     _load_all()
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 # ---------------------------------------------------------------------------
@@ -568,7 +397,7 @@ def q06_cumulative_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rev_dec stays at Spark's widened DECIMAL(28,4) and the running sum
     # widens further — no downcast back to the element type anywhere: at
     # 100 TB the cumulative total WILL exceed DECIMAL(18,4)'s 10^14, and
-    # a non-ANSI downcast silently NULLs it (ADVICE r10's q106 class)
+    # a non-ANSI downcast silently NULLs it (the class of bug found in q106)
     daily = (
         o.groupBy(F.to_date("o_orderdate").alias("order_date"))
         .agg(

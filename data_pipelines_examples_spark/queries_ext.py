@@ -59,7 +59,7 @@ def q19_customer_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         # widened-decimal cum straight to double — downcasting the
         # running sum back to (18,4) is the silent-overflow-at-scale
-        # pattern ADVICE r10 flagged on q106 (Spark non-ANSI NULLs,
+        # pattern found in q106 in r10 (Spark non-ANSI NULLs,
         # DuckDB keeps full precision)
         F.col("spend_cum").cast("double").alias("spend_cum"),
     )

@@ -20,7 +20,7 @@ def spark():
     # dispatch overhead to every one of the suite's ~2000 tiny jobs —
     # measured 68 s → 47 s on the asof+reporting subset, local[4] is
     # worse again (8 keeps narrow 8-partition stages fully parallel).
-    # The $SPARK_GRAFT_CPUS contract binds bench.py, not the test
+    # $SPARK_GRAFT_CPUS sizes get_session's default master, not the test
     # fixtures; tests that reference parallelism read it from the live
     # session. This exists to keep the suite inside the driver's pytest
     # budget even on a loaded host (r13: cut off at 77% under 2× load).

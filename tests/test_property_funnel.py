@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 EVENTS = ["view", "click", "cart", "buy"]
@@ -119,9 +119,20 @@ def py_pairs(rows, min_support, max_basket):
     return {p: c for p, c in cnt.items() if c >= min_support}
 
 
+# A hot basket: its distinct items replayed ~2,000 times each, so the raw
+# rows far exceed the size cap while the distinct items sit at or just
+# past it. The size guard must count DISTINCT items on the one reducer
+# that the basket-keyed exchange sends them all to: 3 items are kept, 4
+# are dropped, and the small cold basket beside it is unaffected.
+def _hot_basket(items, replays=2000):
+    return [(1, i) for _ in range(replays) for i in items] + [(2, "a"), (2, "b")]
+
+
 @given(rows=basket_stream,
        min_support=st.integers(min_value=1, max_value=3),
        max_basket=st.sampled_from([None, 2, 3]))
+@example(rows=_hot_basket("abc"), min_support=1, max_basket=3)
+@example(rows=_hot_basket("abcd"), min_support=1, max_basket=3)
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 def test_cooccurrence_pairs_matches_bruteforce(spark, rows, min_support, max_basket):
     from data_pipelines_examples_spark.operators.itemsets import cooccurrence_pairs

@@ -1,6 +1,6 @@
 """Round-10 fixes, pinned.
 
-1. cache.py's last documented race is closed (VERDICT r9 #6): the arm
+1. cache.py's last documented race is closed (r9 review item 6): the arm
    (persist + registry append) and every release (equal-plan check +
    unpersist) are mutually exclusive critical sections under the one
    registry lock, so a cached-but-unregistered frame can no longer lose
@@ -111,7 +111,7 @@ def test_concurrent_arm_survives_global_drain(spark, monkeypatch):
 
 
 def test_replicate_past_caesar_wrap(tmp_path):
-    """r10 (VERDICT item 4): --replicate=K now supports K in (26, 100]
+    """r10 (r9 review item 4): --replicate=K now supports K in (26, 100]
     for the 100x rung. Pins for the 26+ regime: (a) every pair of
     replica char tables agrees on at most _MAX_LETTER_AGREEMENT
     lowercase letters (full pairwise derangement is pigeonhole-

@@ -11,9 +11,12 @@
 # rebuild: seed 2's hot o_custkey is 2338 with ~450k orders; seed 1's
 # is 11452. ~8 min, ~2 GB in /tmp.
 #
-# Also rebuilds the two bench rungs: /tmp/sf1_bench (scale-10
-# bootstrap, seed 99 — BENCH_SF1.json) and /tmp/sf1_replica
-# (multiplicity-preserving --replicate=10 — BENCH_SF1_REPLICA.json).
+# Also rebuilds the two sf1 scale rungs that BENCH_SF1.json and
+# BENCH_SF1_REPLICA.json were measured on: /tmp/sf1_bench (scale-10
+# bootstrap, seed 99) and /tmp/sf1_replica (multiplicity-preserving
+# --replicate=10). Today they feed the oracle gate
+# (tools/check_oracle.py /tmp/sf1_bench); perfbench scales its own
+# seeded inputs with --scale.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SRC=/root/testdata/sf0.1
@@ -34,4 +37,4 @@ build_composed 20260814 /tmp/sf1_composed
 build_composed 99260816 /tmp/sf1_composed_s2
 python tools/resample_testdata.py --scale=10 "$SRC" /tmp/sf1_bench 99
 python tools/resample_testdata.py --replicate=10 "$SRC" /tmp/sf1_replica
-echo "composed seeds + bench rungs rebuilt"
+echo "composed seeds + scale rungs rebuilt"
